@@ -98,8 +98,6 @@ def read(path: str) -> EventLog:
 
 @dataclass
 class GroupStats:
-    jobs: int = 0
-    tasks: int = 0
     gc_s: float = 0.0
     spill_mb: float = 0.0
     shuffle_write_mb: float = 0.0
@@ -109,22 +107,19 @@ class GroupStats:
     task_skew: float = 0.0  # max/median task time of the group's heaviest stage
 
 
-def _inside(ms: int, windows: list[tuple[float, float]] | None) -> bool:
-    return windows is None or any(lo * 1e3 <= ms <= hi * 1e3 for lo, hi in windows)
+def _inside(ms: int, windows: list[tuple[float, float]]) -> bool:
+    return any(lo * 1e3 <= ms <= hi * 1e3 for lo, hi in windows)
 
 
 def group_stats(log: EventLog, groups: set[str],
-                windows: list[tuple[float, float]] | None = None) -> GroupStats:
-    """Totals over every job and task whose job group is in `groups`,
-    and, with `windows` (epoch seconds), that started inside one."""
+                windows: list[tuple[float, float]]) -> GroupStats:
+    """Totals over every task whose job group is in `groups` and that
+    was launched inside one of the epoch-second `windows`."""
     out = GroupStats()
-    out.jobs = sum(1 for j in log.jobs
-                   if j.group in groups and _inside(j.submit_ms, windows))
     by_stage: dict[int, list[Task]] = defaultdict(list)
     for t in log.tasks:
         if t.group not in groups or not _inside(t.launch_ms, windows):
             continue
-        out.tasks += 1
         out.gc_s += t.gc_ms / 1e3
         out.spill_mb += t.spill_bytes / 1e6
         out.shuffle_write_mb += t.shuffle_write_bytes / 1e6

@@ -42,12 +42,12 @@ def mem_available_mb() -> int:
     raise RuntimeError("MemAvailable missing from /proc/meminfo")
 
 
-def plan(cores: int | None = None, avail_mb: int | None = None) -> Plan:
+def plan() -> Plan:
     """Local-mode session shape: one driver JVM with every core. No
     local-cluster executors, so cores are never oversubscribed; memory
     is checked against what the shape needs."""
-    cores = cores or len(os.sched_getaffinity(0))
-    avail = mem_available_mb() if avail_mb is None else avail_mb
+    cores = len(os.sched_getaffinity(0))
+    avail = mem_available_mb()
     need = DRIVER_MB + JVM_OVERHEAD_MB + cores * WORKER_MB
     if avail < need:
         return Plan(cores, DRIVER_MB, avail, False,
@@ -129,11 +129,12 @@ def tree_pss_bytes(root: int) -> int:
 
 
 class MemorySampler:
-    """Samples the PSS of this process's tree on a thread; `peak` is the
-    largest sum seen between `start` and `stop`."""
+    """Samples the PSS of this process's tree every `INTERVAL_S` on a
+    thread; `peak` is the largest sum seen between `start` and `stop`."""
 
-    def __init__(self, interval_s: float = 0.2):
-        self.interval_s = interval_s
+    INTERVAL_S = 0.2
+
+    def __init__(self):
         self.peak = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
@@ -142,7 +143,7 @@ class MemorySampler:
         root = os.getpid()
         while True:
             self.peak = max(self.peak, tree_pss_bytes(root))
-            if self._stop.wait(self.interval_s):
+            if self._stop.wait(self.INTERVAL_S):
                 return
 
     def start(self) -> "MemorySampler":
@@ -154,23 +155,6 @@ class MemorySampler:
             self._stop.set()
             self._thread.join(timeout=10)
         return self.peak
-
-
-_TICK = os.sysconf("SC_CLK_TCK")
-
-
-def tree_cpu_s(root: int) -> float:
-    """CPU seconds (user + system, including reaped children's) of
-    `root` and its live descendants."""
-    total = 0
-    for pid in process_tree(root):
-        try:
-            with open(f"/proc/{pid}/stat") as f:
-                fields = f.read().rpartition(")")[2].split()
-        except OSError:
-            continue
-        total += sum(int(x) for x in fields[11:15])  # utime stime cutime cstime
-    return total / _TICK
 
 
 def dir_bytes(path: str) -> int:

@@ -6,9 +6,9 @@ timed more than one); `store.*` figures are per timed operation, cycle
 or request; server latencies are medians over the run's requests;
 the `seen.*` timings come from the seen filter run over the last
 cycle's own tables after the timed region (the cycle itself runs with
-the filter off). A layer the workload
-never calls reports 0: the crawl layers on `crawldb_query`, whose
-timed region only reads.
+the filter off). A layer the workload never calls reports 0: the
+crawl layers on `crawldb_query`, whose timed region only reads, and
+the server layers on `steady_cycle`.
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ from perfbench.trace import self_time
 STAGES = ("generate", "mark_generated", "fetch", "parse_text", "parse_data",
           "crawl_parse", "updatedb")
 PARSE = ("parse_text", "parse_data", "crawl_parse")
-# request kind of the serve phase → per-layer latency metric
+# request kind → per-layer latency metric
 ROUTES = {
     "stats": "readdb.stats_ms", "topn": "readdb.topn_ms",
     "url_known": "readdb.url_ms", "url_unknown": "readdb.url_ms",
@@ -116,7 +116,7 @@ def per_layer(runner, cnt: dict, log: eventlog.EventLog) -> dict:
         "store.files_written": sum(_files(s.attrs["path"]) for s in writes) / n_ops,
         "store.mb_written": sum(dir_bytes(s.attrs["path"]) for s in writes) / n_ops / 1e6,
         "store.read_s": sum(s.duration for s in reads) / n_ops,
-        "store.files_read": sum(s.attrs["files"] for s in reads) / n_ops,
+        "store.files_read": sum(_files_read(s) for s in reads) / n_ops,
         "store.commit_s": wall("store.commit"),
         "metrics.append_s": sum(s.duration for s in appends) / n,
         "metrics.appends": len(appends) / n,
@@ -136,4 +136,19 @@ def per_layer(runner, cnt: dict, log: eventlog.EventLog) -> dict:
 
 
 def _files(path: str) -> int:
-    return sum(len(files) for _root, _dirs, files in os.walk(path))
+    """Data files under `path`: Spark skips names starting with _ or ."""
+    return sum(1 for _root, _dirs, files in os.walk(path)
+               for name in files if not name.startswith(("_", ".")))
+
+
+def _files_read(span) -> int:
+    """Data files of the snapshot a `store.read` span read: an
+    append-mode table reads every committed snapshot up to it."""
+    from nutch_spark.store import SnapshotStore
+
+    snap = span.attrs.get("snapshot")  # unset when the read raised
+    if snap is None:
+        return 0
+    store, table = SnapshotStore(span.attrs["root"]), span.attrs["table"]
+    snaps = range(snap + 1) if store._is_append(table) else [snap]
+    return sum(_files(store.snapshot_path(table, i)) for i in snaps)

@@ -1,7 +1,7 @@
 """Crawl benchmark: one workload per run, or every workload.
 
-    python3 perfbench/run.py --workload steady_cycle --seed 1 --seconds 15 --trace 0
-    python3 perfbench/run.py --workload all --seed 1 --seconds 15 --trace 1
+    python3 perfbench/run.py --workload steady_cycle --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload all --seed 1 --seconds 12 --trace 1
 
 Run from the repository root. A run starts one local-mode SparkSession
 with every core, prepares the workload's warehouse (set-up), times the
@@ -40,7 +40,7 @@ sys.path.insert(0, ROOT)
 from perfbench import host  # noqa: E402
 from perfbench.stats import percentile, tail_percentile, valid_metric_name  # noqa: E402
 
-WARM_UP_ROUNDS = 1  # untimed passes over the request mix in set-up
+WARM_UP_ROUNDS = 2  # untimed rounds of the request mix in set-up
 
 
 def load_spec() -> dict:
@@ -117,7 +117,6 @@ class Runner:
         self.cycles: list[tuple[object, dict]] = []  # (span, stats)
         self.requests: list[tuple[object, str, int, object, str | None]] = []
         self.failures: dict[str, list[str]] = {}  # operation → problems
-        self.cpu_s = 0.0  # CPU time of the process tree over the timed region
 
     def setup(self):
         from nutch_spark.session import get_spark
@@ -127,9 +126,10 @@ class Runner:
         spark.sparkContext.setLogLevel("ERROR")
         if self.args.trace:
             self.tracer.sc = spark.sparkContext
+        query = self.workload.op == "query"
         self.template = prepare(spark, os.path.join(self.work, "template"),
-                                self.web, self.cfg)
-        if self.workload.op == "query":
+                                self.web, self.cfg, crawl=query)
+        if query:
             self.client = self._client(spark, self.template)
             self._warm_up()
         return spark
@@ -138,10 +138,10 @@ class Runner:
         """Untimed rounds of the request mix: a server answers many
         requests per start, so the timed ones should not pay the query
         compilation and JIT warm-up of the first ones."""
-        from perfbench.workloads import FRONTIER_MIX, draw_request
+        from perfbench.workloads import draw_request, query_round
 
         rng = random.Random(-self.args.seed)
-        for kind in FRONTIER_MIX * WARM_UP_ROUNDS:
+        for kind in (k for i in range(WARM_UP_ROUNDS) for k in query_round(i)):
             method, path, body, _key = draw_request(kind, self.web, rng)
             resp = self.client.open(path, method=method, json=body)
             if resp.status_code != 200:
@@ -150,12 +150,13 @@ class Runner:
     def timed(self, spark, seconds: float):
         """Run the operations --seconds buys; returns the store the last
         one used."""
-        from perfbench.workloads import FRONTIER_MIX
+        from perfbench.workloads import query_round
 
         n = max(1, round(seconds / self.workload.op_s))
         if self.workload.op == "query":
-            for kind in FRONTIER_MIX * n:
-                self._request(self.client, kind)
+            for i in range(n):
+                for kind in query_round(i):
+                    self._request(self.client, kind)
             return self.template
         for _ in range(n):
             store = self._cycle(spark)
@@ -192,16 +193,6 @@ class Runner:
             except Exception:  # a raising request is a failed operation
                 status, payload = -1, traceback.format_exc(limit=3)
         self.requests.append((sp, kind, status, payload, key))
-
-    def read_round(self, spark, store) -> None:
-        """One pass of every read request over a post-cycle warehouse,
-        so a traced cycle run also times the read layers on the tables
-        a cycle writes."""
-        from perfbench.workloads import CYCLE_MIX
-
-        client = self._client(spark, store)
-        for kind in CYCLE_MIX:
-            self._request(client, kind)
 
     def check(self, spark, store) -> None:
         from nutch_spark.store import SnapshotStore
@@ -241,7 +232,7 @@ class Runner:
             "setup_s": setup_s,
         }
 
-    def context(self, setup_s: float, steal: float, run_s: float) -> dict:
+    def context(self, setup_s: float, steal: float) -> dict:
         lat = self._latencies_ms()
         tail = tail_percentile(len(lat))
         return {
@@ -253,10 +244,9 @@ class Runner:
             "driver_mb": self.plan.driver_mb,
             "medium": host.filesystem_of(self.work),
             "steal_share": round(steal, 4),
-            "timed_cpu_s": round(self.cpu_s, 2),
             "setup_s": round(setup_s, 3),
-            "run_s": round(run_s, 1),
             "operations": len(lat),
+            "op_p50_ms": round(statistics.median(lat), 1),
             "cycle_s": [round(sp.duration, 3) for sp, _ in self.cycles],
             "fetched": [st["fetched"] for _, st in self.cycles],
             "latency_tail": (f"p{tail}={percentile(lat, tail):.1f}ms" if tail
@@ -266,7 +256,7 @@ class Runner:
         }
 
 
-def run_one(args, t_start: float) -> int:
+def run_one(args) -> int:
     from perfbench import layers
     from perfbench.trace import instrument
 
@@ -285,17 +275,14 @@ def run_one(args, t_start: float) -> int:
     t0 = time.perf_counter()
     spark = None
     try:
+        spark = runner.setup()
+        setup_s = time.perf_counter() - t0
+        cpu0 = host.cpu_times()
         with instrument(runner.tracer) if args.trace else nullcontext():
-            spark = runner.setup()
-            setup_s = time.perf_counter() - t0
-            cpu0, tree0 = host.cpu_times(), host.tree_cpu_s(os.getpid())
             store = runner.timed(spark, args.seconds)
-            steal = host.steal_share(cpu0, host.cpu_times())
-            runner.cpu_s = host.tree_cpu_s(os.getpid()) - tree0
-            warehouse = host.dir_bytes(store.root)
-            peak = memory.stop()
-            if args.trace and runner.workload.op == "cycle":
-                runner.read_round(spark, store)
+        steal = host.steal_share(cpu0, host.cpu_times())
+        warehouse = host.dir_bytes(store.root)
+        peak = memory.stop()
         runner.check(spark, store)
         counts = layers.counts(spark, runner) if args.trace else None
     finally:
@@ -317,7 +304,7 @@ def run_one(args, t_start: float) -> int:
     missing = [m["name"] for m in names if m["name"] not in metrics]
     if missing:
         raise RuntimeError(f"metrics not measured: {missing}")
-    ctx = runner.context(setup_s, steal, time.perf_counter() - t_start)
+    ctx = runner.context(setup_s, steal)
     print(json.dumps({"context": ctx}))
     print(json.dumps({
         "correct": not runner.failures,
@@ -353,16 +340,15 @@ def run_all(args) -> int:
         ctx = res["context"]
         print(f"== {name} ({'traced' if trace else 'untraced'}): "
               f"{ctx['operations']} operations, tail {ctx['latency_tail']}, "
-              f"medium {ctx['medium']}, steal {ctx['steal_share']:.1%}, "
-              f"run {ctx['run_s']} s")
+              f"medium {ctx['medium']}, steal {ctx['steal_share']:.1%}")
         print(f"   {'error_ratio':28s} {ctx['error_ratio']:>14.4f} ratio")
         for metric, m in res["metrics"].items():
             print(f"   {metric:28s} {m['value']:>14.4f} {m['unit']}")
             summary["metrics"][f"{name}.{metric}"] = m
-        if trace and (name, 0) in results and ctx["cycle_s"]:
-            untraced = statistics.median(results[name, 0]["context"]["cycle_s"])
-            traced = statistics.median(ctx["cycle_s"])
-            print(f"   tracing overhead on the cycle: {traced / untraced - 1:+.1%}")
+        if trace and (name, 0) in results:
+            untraced = results[name, 0]["context"]["op_p50_ms"]
+            print(f"   tracing overhead on the median operation: "
+                  f"{ctx['op_p50_ms'] / untraced - 1:+.1%}")
         summary["correct"] &= res["correct"]
         summary["attempted"] += res["attempted"]
         summary["failed"] += res["failed"]
@@ -371,7 +357,6 @@ def run_all(args) -> int:
 
 
 def main(argv=None) -> int:
-    t_start = time.perf_counter()
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--workload", required=True, help="a workload name, or all")
     ap.add_argument("--seed", type=int, required=True)
@@ -388,7 +373,7 @@ def main(argv=None) -> int:
         return run_all(args)
     if args.workload not in WORKLOADS:
         ap.error(f"unknown workload {args.workload!r}; one of {sorted(WORKLOADS)} or all")
-    return run_one(args, t_start)
+    return run_one(args)
 
 
 if __name__ == "__main__":

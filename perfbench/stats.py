@@ -22,12 +22,15 @@ def percentile(values: list[float], p: float) -> float:
     return ordered[rank - 1]
 
 
-def tail_percentile(n: int, beyond: int = 10) -> int | None:
+TAIL_BEYOND = 10  # samples a tail percentile must leave above it
+
+
+def tail_percentile(n: int) -> int | None:
     """Highest whole percentile of `n` samples that leaves at least
-    `beyond` samples above its nearest rank, or None when even the
+    `TAIL_BEYOND` samples above its nearest rank, or None when even the
     lowest percentile cannot. A tail figure with fewer samples beyond
     it is one or two outliers, not a percentile."""
     for p in range(99, 0, -1):
-        if n - math.ceil(p / 100 * n) >= beyond:
+        if n - math.ceil(p / 100 * n) >= TAIL_BEYOND:
             return p
     return None

@@ -86,7 +86,6 @@ def test_tracer_records_parents_and_descendants():
     assert [s.name for s in tr.children(cycle)] == ["fetch", "parse_text"]
     assert {s.name for s in tr.descendants(cycle)} == {"fetch", "store.read", "parse_text"}
     assert all(s.run == "r" and s.end >= s.start for s in tr.spans)
-    assert not tr.is_open("cycle")
 
 
 # ---- write spans are named after the stage that owns the table ----
@@ -101,15 +100,14 @@ class _Store:
 
 def test_write_layer_names_frontier_writes_by_stage():
     fresh = _Store({})
-    assert write_layer(fresh, "frontier", in_cycle=False) == "inject"
-    assert write_layer(fresh, "fetchlist", in_cycle=True) == "generate"
-    assert write_layer(fresh, "frontier", in_cycle=True) == "mark_generated"
+    assert write_layer(fresh, "fetchlist") == "generate"
+    assert write_layer(fresh, "frontier") == "mark_generated"
     parsed = _Store({"seg0000": {s: {"done": True} for s in ("generate", "fetch", "parse")}})
-    assert write_layer(parsed, "frontier", in_cycle=True) == "updatedb"
-    assert write_layer(parsed, "parse_data", in_cycle=True) == "parse_data"
+    assert write_layer(parsed, "frontier") == "updatedb"
+    assert write_layer(parsed, "parse_data") == "parse_data"
     done = _Store({"seg0000": {s: {"done": True}
                                for s in ("generate", "fetch", "parse", "updatedb")}})
-    assert write_layer(done, "frontier", in_cycle=True) == "mark_generated"
+    assert write_layer(done, "frontier") == "mark_generated"
 
 
 # ---- event-log parsing ----
@@ -118,28 +116,44 @@ def test_event_log_fixture():
     log = eventlog.read(FIXTURE)
     assert [j.group for j in log.jobs] == [None, "fetch", "parse_data", "updatedb"]
     assert len(log.tasks) == 9
+    everything = [(0.0, 10.0)]
 
-    fetch = eventlog.group_stats(log, {"fetch"})
-    assert (fetch.jobs, fetch.tasks) == (1, 4)
+    fetch = eventlog.group_stats(log, {"fetch"}, everything)
     # heaviest stage of the group is stage 2: tasks of 100, 200, 500 ms
     assert fetch.task_skew == pytest.approx(500 / 200)
     assert fetch.python_s == pytest.approx(0.170)
     assert fetch.gc_s == pytest.approx(0.005)
 
-    parse = eventlog.group_stats(log, {"parse_text", "parse_data"})
+    parse = eventlog.group_stats(log, {"parse_text", "parse_data"}, everything)
     assert parse.python_mb_in == pytest.approx(3.0)
     assert parse.python_mb_out == pytest.approx(0.5)
 
-    upd = eventlog.group_stats(log, {"updatedb"})
+    upd = eventlog.group_stats(log, {"updatedb"}, everything)
     assert upd.gc_s == pytest.approx(1.0)
     assert upd.spill_mb == pytest.approx(3.0)
     assert upd.shuffle_write_mb == pytest.approx(2.0)
 
-    assert eventlog.group_stats(log, {"nothing"}).tasks == 0
+    assert eventlog.group_stats(log, {"nothing"}, everything) == eventlog.GroupStats()
+    assert eventlog.window_counts(log, everything) == (4, 9)
     assert eventlog.window_counts(log, [(1.5, 3.5)]) == (2, 6)
-    # only work started inside the timed windows counts
-    assert eventlog.group_stats(log, {"fetch", "updatedb"}, [(3.5, 4.5)]).tasks == 2
-    assert eventlog.group_stats(log, {"fetch"}, [(3.5, 4.5)]).jobs == 0
+    # only work started inside the timed windows counts: the updatedb
+    # tasks launched at 4 s, not the fetch tasks launched before 3.5 s
+    late = eventlog.group_stats(log, {"fetch", "updatedb"}, [(3.5, 4.5)])
+    assert late.gc_s == pytest.approx(upd.gc_s)
+    assert eventlog.group_stats(log, {"fetch"}, [(3.5, 4.5)]) == eventlog.GroupStats()
+
+
+# ---- the request mix ----
+
+def test_query_round_sends_every_kind_once():
+    from perfbench.workloads import QUERY_KINDS, query_round
+
+    for i in range(4):
+        kinds = query_round(i)
+        assert len(kinds) == len(QUERY_KINDS) == len(set(kinds))
+        assert {k for k in kinds if not k.startswith("url")} == set(QUERY_KINDS) - {"url"}
+    assert [k for i in range(4) for k in query_round(i) if k.startswith("url")] == [
+        "url_known", "url_unknown", "url_known", "url_unknown"]
 
 
 # ---- metric names ----

@@ -59,11 +59,11 @@ def self_time(span: Span, children: list[Span]) -> float:
 
 
 class Tracer:
-    def __init__(self, run: str, sc=None):
+    def __init__(self, run: str):
         self.run = run
         self.spans: list[Span] = []
         self._stack: list[Span] = []
-        self.sc = sc  # SparkContext whose job group follows the span
+        self.sc = None  # SparkContext whose job group follows the span
         # perf_counter → epoch seconds, to line spans up with the
         # event log's millisecond wall-clock stamps
         self.epoch_offset = time.time() - time.perf_counter()
@@ -86,9 +86,6 @@ class Tracer:
     def _set_group(self, name: str | None) -> None:
         if self.sc is not None:
             self.sc.setLocalProperty("spark.jobGroup.id", name)
-
-    def is_open(self, name: str) -> bool:
-        return any(s.name == name for s in self._stack)
 
     def children(self, span: Span) -> list[Span]:
         return [s for s in self.spans if s.parent == span.id]
@@ -119,12 +116,10 @@ def _pending_stage(store) -> str:
     return "generate"  # the next segment's generate
 
 
-def write_layer(store, table: str, in_cycle: bool) -> str:
-    """Span name for a `SnapshotStore.write` of `table`. Outside a cycle
-    the frontier is written by set-up or inject."""
+def write_layer(store, table: str) -> str:
+    """Span name for a `SnapshotStore.write` of `table` inside a cycle:
+    the frontier is written twice, by mark_generated and by updatedb."""
     if table == "frontier":
-        if not in_cycle:
-            return "inject"
         return "updatedb" if _pending_stage(store) == "updatedb" else "mark_generated"
     if table == "fetchlist":
         return "generate"
@@ -148,7 +143,7 @@ def instrument(tracer: Tracer):
 
     def write(orig):
         def wrapped(self, df, table, *a, **kw):
-            layer = write_layer(self, table, tracer.is_open("cycle"))
+            layer = write_layer(self, table)
             with tracer.span(layer, table=table) as sp:
                 snap = orig(self, df, table, *a, **kw)
             sp.attrs["path"] = self.snapshot_path(table, snap)
@@ -164,10 +159,14 @@ def instrument(tracer: Tracer):
         return wrapped
 
     def read(orig):
+        # only names what was read; layers.per_layer counts its files
+        # after the run, so a traced read does no more work than an
+        # untraced one
         def wrapped(self, spark, table, snapshot=None):
-            with tracer.span("store.read", table=table) as sp:
+            with tracer.span("store.read", table=table, root=self.root) as sp:
                 df = orig(self, spark, table, snapshot)
-            sp.attrs["files"] = len(df.inputFiles())
+            sp.attrs["snapshot"] = (self.current_snapshot(table)
+                                    if snapshot is None else snapshot)
             return df
         return wrapped
 

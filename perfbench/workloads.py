@@ -4,7 +4,8 @@ output checks. The seed reaches the program only through
 
 `steady_cycle` times one `Crawler.cycle`; `crawldb_query` times a
 closed loop of read requests through `server.create_app(...)
-.test_client()`. Each is the bypass workload for the other's layers.
+.test_client()` over a warehouse one `Crawler.cycle` finished in
+set-up. Each is the bypass workload for the other's layers.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from nutch_spark.constants import (
     STATUS_FETCH_REDIR_TEMP,
     STATUS_FETCH_SUCCESS,
 )
-from nutch_spark.crawl import CrawlConfig
+from nutch_spark.crawl import CrawlConfig, Crawler
 from nutch_spark.operators.seen import CuckooSeenFilter, unseen_exact
 from nutch_spark.store import SnapshotStore
 from nutch_spark.synth import WebConfig, frontier_df, page_outcome, page_url
@@ -49,22 +50,29 @@ def steady_cycle(seed: int, cores: int) -> tuple[WebConfig, CrawlConfig]:
 
 
 def crawldb_query(seed: int, cores: int) -> tuple[WebConfig, CrawlConfig]:
-    """A crawl db five times the cycle's frontier, served read-only."""
+    """A crawl db five times the cycle's frontier, crawled one cycle
+    with the default config (a 1000-URL fetchlist) in set-up, then
+    served read-only."""
     web = WebConfig(seed=seed, n_hosts=1000 * cores, pages_per_host=10, zipf=False)
     return web, CrawlConfig()
 
 
 WORKLOADS = {w.name: w for w in (
-    Workload("steady_cycle", "cycle", steady_cycle, op_s=45.0),
-    Workload("crawldb_query", "query", crawldb_query, op_s=3.0),
+    Workload("steady_cycle", "cycle", steady_cycle, op_s=40.0),
+    Workload("crawldb_query", "query", crawldb_query, op_s=2.3),
 )}
 
 
-def prepare(spark, root: str, web: WebConfig, cfg: CrawlConfig) -> SnapshotStore:
+def prepare(spark, root: str, web: WebConfig, cfg: CrawlConfig,
+            crawl: bool) -> SnapshotStore:
     """Synthesize the mid-crawl frontier as the warehouse's first
-    snapshot."""
+    snapshot; with `crawl`, run one cycle over it, so the warehouse
+    holds what a crawl writes: an updatedb-written frontier and a
+    segment's fetchlist, fetch results and parse tables."""
     store = SnapshotStore(root)
     store.write(frontier_df(spark, web, cfg.start_time_ms), "frontier")
+    if crawl:
+        Crawler(spark, store, web, cfg).cycle(0)
     return store
 
 
@@ -75,15 +83,18 @@ def fresh_copy(template: str, root: str) -> SnapshotStore:
 
 # ---- read surface ----
 
-# /db/crawldb and /hostdb read the frontier alone; /linkdb and
-# /segments also read a cycle's parse and fetch tables. Point lookups,
-# the commonest read, are five of the nine requests of a round, so the
-# median latency sits inside one kind of request instead of on the
-# boundary between two kinds whose costs differ several-fold.
-FRONTIER_MIX = ("url_known", "stats", "url_unknown", "topn", "url_known",
-                "dump", "url_unknown", "hostdb", "url_known")
-CYCLE_MIX = ("stats", "topn", "url_known", "url_unknown", "dump", "hostdb",
-             "linkdb", "segments")
+# One round of the request mix: every read route of the server once,
+# at equal weight, since no request log says how a crawl db's readers
+# weigh them. The url lookup alternates between a known and an unknown
+# key from one round to the next.
+QUERY_KINDS = ("stats", "topn", "url", "dump", "hostdb", "linkdb", "segments")
+
+
+def query_round(i: int) -> list[str]:
+    url = "url_known" if i % 2 == 0 else "url_unknown"
+    return [url if kind == "url" else kind for kind in QUERY_KINDS]
+
+
 TOPN, DUMP_LIMIT = 10, 20
 
 
