@@ -1823,7 +1823,8 @@ WHERE f.status IN (2, 6)
 # exercises the fork's multi-entry parse: each subdoc span becomes a
 # non-canonical parse entry and a synthesized fetch_success datum
 # (ParseImpl.java:31-73; ParseOutputFormat.java:296-308).
-PARSE_FETCH_SQL = f"""
+def parse_fetch_sql(source: str) -> str:
+    return f"""
 SELECT
   {_url('o_orderkey')} AS url,
   cast(o_orderkey * 2654435761 as bigint) AS url_hash,
@@ -1854,7 +1855,7 @@ SELECT
                                 ' href:', {_url('o_orderkey * 11 + 1')}),
                  'media_ref', cast(null as string), 'offset', 0))
   end AS spans
-FROM orders
+FROM {source}
 """
 
 
@@ -1874,7 +1875,10 @@ FROM orders
 #   6. url(k+873): internal but over the max_outlinks=3 cap — dropped;
 #   7. url(k): self-link — dropped.
 _PL_A = _url("(o_orderkey + 291)")
-PARSE_LINKS_SQL = f"""
+
+
+def parse_links_sql(source: str) -> str:
+    return f"""
 SELECT
   {_url('o_orderkey')} AS url,
   cast(o_orderkey * 2654435761 as bigint) AS url_hash,
@@ -1899,7 +1903,7 @@ SELECT
            ' href:', {_url('(o_orderkey + 873)')},
            ' href:', {_url('o_orderkey')}),
     'media_ref', cast(null as string), 'offset', 0)) AS spans
-FROM orders
+FROM {source}
 """
 
 
@@ -1917,7 +1921,7 @@ def q_parse_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         self-drop → ignore-external(byHost) → exemption bypass →
         first-occurrence dedup → max_outlinks cap, with k%10=0 pages
         forced down the slow explode path by a non-canonical href (see
-        PARSE_LINKS_SQL) — fast and slow paths must produce identical
+        parse_links_sql) — fast and slow paths must produce identical
         ordered outlinks."""
     from .constants import STATUS_FETCH_SUCCESS, STATUS_SIGNATURE
     from .functions.urlplugins import ExemptionRules
@@ -1943,7 +1947,7 @@ def q_parse_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
                          as bigint) % 5 = 0
                     then map('Content-Length', '9999999')
                     else cast(null as map<string,string>) end AS metadata
-        FROM ({PARSE_FETCH_SQL.replace("FROM orders", "FROM orders_wide")}) b
+        FROM ({parse_fetch_sql("orders_wide")}) b
         """
     ).withColumn("segment", F.lit("seg"))
     _pd, cp = parse(fr, skip_truncated=True)
@@ -1982,9 +1986,9 @@ def q_parse_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit("canon").alias("leg"), "url", "v1", "v2", "s1")
     )
 
-    lf = spark.sql(
-        PARSE_LINKS_SQL.replace("FROM orders", "FROM orders_wide")
-    ).withColumn("segment", F.lit("seg"))  # see orders_wide above
+    lf = spark.sql(parse_links_sql("orders_wide")).withColumn(
+        "segment", F.lit("seg")
+    )  # see orders_wide above
     lpd = parse(
         lf,
         max_outlinks=3,
@@ -2178,7 +2182,7 @@ def q_warc_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.warc import warc_records
 
     _views(spark, sf_dir, ["orders"])
-    fr = spark.sql(PARSE_FETCH_SQL).withColumn("segment", F.lit("seg"))
+    fr = spark.sql(parse_fetch_sql("orders")).withColumn("segment", F.lit("seg"))
     warc = warc_records(fr).select(
         F.lit("warc").alias("leg"),
         "url",

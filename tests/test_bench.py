@@ -3,7 +3,8 @@ failure would silently corrupt the official scaling record: the host
 steal sampler's jiffy math, the pair load-symmetry acceptance, and the
 median-over-symmetric-pairs estimator. The heavy phases themselves run
 real Spark and are exercised by the bench itself; these tests stub
-them (no SparkSession)."""
+them (no SparkSession), except one small run of the timed cycle
+helper, which checks that the bench times the crawler's own cycle."""
 
 from __future__ import annotations
 
@@ -52,12 +53,13 @@ class TestHostSampler:
         assert s is None or (len(s) == 3 and all(v >= 0 for v in s))
 
 
-def _phase(tput, fault=0.15, cpu=0.10, io=0.09, steal=1.0):
+def _phase(tput, steal=1.0, burst=None):
     return {
         "throughput_urls_per_sec": tput,
-        "calib": {"fault_sec": fault, "cpu_sec": cpu, "io_sec": io},
-        "calib_end": {"fault_sec": fault, "cpu_sec": cpu, "io_sec": io},
-        "host": {"steal_norm_pct": steal},
+        "host": {
+            "steal_norm_pct": steal,
+            "steal_burst_pct": steal if burst is None else burst,
+        },
     }
 
 
@@ -70,18 +72,9 @@ def _pair_from(monkeypatch, lo, hi):
 class TestMeasurePair:
     def test_healthy_pair_symmetric(self, monkeypatch):
         p = _pair_from(monkeypatch, _phase(8000.0), _phase(26000.0))
-        assert p["probe_symmetric"] is True
         assert p["load_symmetric"] is True
         assert p["speedup"] == 3.25
         assert p["efficiency"] == round(3.25 / 4, 3)
-
-    def test_probe_drift_flags_pair(self, monkeypatch):
-        # fault path 0.15 → 0.45 s between windows: > 1.6× damped band
-        p = _pair_from(
-            monkeypatch, _phase(8000.0, fault=0.15), _phase(26000.0, fault=0.45)
-        )
-        assert p["probe_symmetric"] is False
-        assert p["load_symmetric"] is False
 
     def test_cross_shape_steal_gap_does_not_flag(self, monkeypatch):
         # structurally, a low window reads higher steal_norm than a
@@ -107,19 +100,19 @@ class TestMeasurePair:
         assert os.environ["BENCH_HIGH_CYCLES"] == "1"
 
 
-def _pair(lo_steal, hi_steal, probe=True, eff=0.8):
+def _pair(lo_steal, hi_steal, eff=0.8, lo_burst=None):
     p = {
-        "low": _phase(8000.0, steal=lo_steal),
+        "low": _phase(8000.0, steal=lo_steal, burst=lo_burst),
         "high": _phase(8000.0 * eff * 4, steal=hi_steal),
-        "probe_symmetric": probe,
-        "load_symmetric": probe,
+        "load_symmetric": True,
         "efficiency": eff,
         "speedup": eff * 4,
     }
+    # steady_cycle records host=None when the sampler got < 2 samples
     if lo_steal is None:
-        del p["low"]["host"]
+        p["low"]["host"] = None
     if hi_steal is None:
-        del p["high"]["host"]
+        p["high"]["host"] = None
     return p
 
 
@@ -147,22 +140,32 @@ class TestStealSymmetry:
         assert pairs[0]["load_symmetric"] is False
         assert pairs[1]["load_symmetric"] is True
 
-    def test_probe_verdict_is_preserved(self):
-        pairs = [_pair(2.0, 1.0, probe=False), _pair(2.1, 1.1)]
+    def test_burst_low_window_flagged(self):
+        # a low window whose mean stays inside the norm band (3.58 vs
+        # 0.10) but whose worst 5 s saw 59.24 % stolen — flagged by the
+        # burst band against the clean pair
+        pairs = [_pair(0.10, 0.07, lo_burst=1.36),
+                 _pair(3.58, 0.05, lo_burst=59.24)]
         bench._apply_steal_symmetry(pairs)
-        assert pairs[0]["load_symmetric"] is False
-        assert pairs[1]["load_symmetric"] is True
+        assert pairs[0]["load_symmetric"] is True
+        assert pairs[1]["load_symmetric"] is False
 
     def test_single_pair_no_comparison(self):
         pairs = [_pair(30.0, 1.0)]
         bench._apply_steal_symmetry(pairs)
         assert pairs[0]["load_symmetric"] is True
+        assert bench._scaling_summary(pairs)["efficiency_stat"].startswith(
+            "ungated"
+        )
 
     def test_missing_host_records_skip_check(self):
         pairs = [_pair(None, 1.0), _pair(None, 7.0)]
         bench._apply_steal_symmetry(pairs)
         assert pairs[0]["load_symmetric"] is True
         assert pairs[1]["load_symmetric"] is False
+        assert bench._scaling_summary(pairs)["efficiency_stat"].startswith(
+            "ungated on the low shape"
+        )
 
     def test_idempotent(self):
         pairs = [_pair(2.0, 1.0), _pair(2.5, 7.0)]
@@ -173,7 +176,8 @@ class TestStealSymmetry:
 
 
 def _p(eff, sym):
-    return {"efficiency": eff, "speedup": eff * 4, "load_symmetric": sym}
+    return {"efficiency": eff, "speedup": eff * 4, "load_symmetric": sym,
+            "low": {}, "high": {}}
 
 
 class TestScalingSummary:
@@ -200,3 +204,15 @@ class TestScalingSummary:
             [_p(0.85, True), _p(0.7, True), _p(0.9, True)]
         )
         assert s["speedup"] == 0.85 * 4
+
+
+def test_bench_cycle_runs_the_crawler(spark, tmp_path):
+    from nutch_spark.store import SnapshotStore
+    from nutch_spark.synth import WebConfig
+
+    web = WebConfig(n_hosts=4, pages_per_host=5, zipf=False)
+    root = str(tmp_path / "wh")
+    n, elapsed = bench.bench_cycle(spark, web, root)
+    assert n == web.n_hosts * web.pages_per_host  # every row is due
+    assert elapsed > 0
+    assert SnapshotStore(root).stage_done("seg0000", "updatedb")
