@@ -537,7 +537,9 @@ class ScopedNormalizers:
         return F.pandas_udf(_apply, T.StringType())
 
     def with_normalized(self, df, src: str, dst: str, scope: str = SCOPE_DEFAULT):
-        return df.withColumn(dst, self.udf(scope)(F.col(src)))
+        # nondeterministic = evaluate once (see urls.normalize_urls)
+        udf = self.udf(scope).asNondeterministic()
+        return df.withColumn(dst, udf(F.col(src)))
 
 
 # ---------------------------------------------------------------------

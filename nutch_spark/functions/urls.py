@@ -137,6 +137,15 @@ def normalize_urls(s: pd.Series) -> pd.Series:
     return _norm_series(s)
 
 
+# Marked nondeterministic (it is not) as an evaluate-once barrier: the
+# optimizer pushes a downstream filter on the normalized column (e.g.
+# accept_urls) through a deterministic projection, which plans a second
+# evaluation of the UDF below the filter — in every scan task on top of
+# the post-shuffle one. A nondeterministic projection is never pushed
+# through, so every reader takes the one computed column.
+normalize_urls = normalize_urls.asNondeterministic()
+
+
 # Java-regex twin of the fast-path pattern, for JVM-side pre-screening.
 # This is the ONLY regex on the per-link hot path: inside array lambdas
 # Catalyst evaluates expressions interpreted (no whole-stage codegen),

@@ -17,6 +17,12 @@ three properties the engine relies on, on plain parquet:
   3. **Checkpoint manifest** — `commit_manifest` records per-cycle stage
      completion for crash-resume (north_rule resumability), like Iceberg
      snapshot metadata.
+  4. **Schema in the commit** — each snapshot's ``_TBLMETA.json``
+     sidecar carries the written frame's schema and is in place before
+     the pointer swap, so it commits atomically with the data. `read`
+     hands that schema to the reader, as Iceberg readers take theirs
+     from table metadata, instead of submitting a Spark job to infer it
+     from a parquet footer. Snapshots without one are inferred as before.
 
 On a real cluster swap `write` for
 ``df.writeTo(table).overwritePartitions()`` — the API here is kept
@@ -31,7 +37,11 @@ import shutil
 import tempfile
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql.types import StructType
+
+# per-snapshot sidecar: the committed schema (+ drop_on_read columns)
+_META = "_TBLMETA.json"
 
 
 class SnapshotStore:
@@ -88,9 +98,8 @@ class SnapshotStore:
         partition pruning) that `read` strips centrally — so EVERY
         consumer (crawl loop, server /seed, readdb, streaming) sees the
         logical schema, not just callers that know about the layout.
-        The list rides in a sidecar file inside the snapshot dir,
-        written BEFORE the pointer swap, so it commits atomically with
-        the data.
+        The list rides in the snapshot's sidecar with its schema (see
+        `_write_meta`).
         """
         cur = self.current_snapshot(table)
         nxt = 0 if cur is None else cur + 1
@@ -109,9 +118,7 @@ class SnapshotStore:
             drop_on_read = [
                 c for c in (drop_on_read or []) if c in df.columns
             ]
-        if drop_on_read:
-            with open(os.path.join(path, "_TBLMETA.json"), "w") as f:
-                json.dump({"drop_on_read": drop_on_read}, f)
+        self._write_meta(path, df, drop_on_read)
         # a full-history write flips the table back to overwrite mode in
         # the same atomic pointer swap, so a later read never unions a
         # full snapshot with earlier incremental ones (double counting)
@@ -144,8 +151,30 @@ class SnapshotStore:
         nxt = 0 if st is None else st[0] + 1
         path = self.snapshot_path(table, nxt)
         df.write.mode("overwrite").parquet(path)
+        self._write_meta(path, df)
         self._advance(table, nxt, mode="append")
         return nxt
+
+    @staticmethod
+    def _write_meta(path: str, df: DataFrame,
+                    drop_on_read: list[str] | None = None) -> None:
+        """Write the snapshot's sidecar: `df`'s schema and the columns
+        `read` drops.
+
+        Called BEFORE the pointer swap, so the sidecar commits
+        atomically with the data. Its name starts with ``_``, which
+        Spark's file listing skips, so it is never read as data."""
+        with open(os.path.join(path, _META), "w") as f:
+            json.dump({"schema": df.schema.jsonValue(),
+                       "drop_on_read": drop_on_read or []}, f)
+
+    @staticmethod
+    def _read_meta(path: str) -> dict[str, Any]:
+        try:
+            with open(os.path.join(path, _META)) as f:
+                return json.load(f)
+        except (FileNotFoundError, json.JSONDecodeError):
+            return {}
 
     def _is_append(self, table: str) -> bool:
         st = self._pointer_state(table)
@@ -160,6 +189,15 @@ class SnapshotStore:
         os.replace(tmp, ptr)  # atomic pointer swap = snapshot commit
 
     def read(self, spark: SparkSession, table: str, snapshot: int | None = None) -> DataFrame:
+        """The table as of `snapshot` (default: current).
+
+        Reads through the schema committed with the snapshot, so no
+        Spark job runs to infer it. An append table uses it only when
+        every unioned snapshot committed the same one; otherwise, and
+        for snapshots committed without one, Spark infers it. (An
+        append table of more than 32 snapshots still costs a job: Spark
+        lists that many paths in parallel,
+        ``spark.sql.sources.parallelPartitionDiscovery.threshold``.)"""
         snap = self.current_snapshot(table) if snapshot is None else snapshot
         if snap is None:
             raise FileNotFoundError(f"table {table} has no committed snapshot")
@@ -169,18 +207,19 @@ class SnapshotStore:
                 for i in range(snap + 1)
                 if os.path.isdir(self.snapshot_path(table, i))
             ]
-            return spark.read.parquet(*paths)
+            schemas = [self._read_meta(p).get("schema") for p in paths]
+            schema = schemas[0] if all(s == schemas[0] for s in schemas) else None
+            return self._reader(spark, schema).parquet(*paths)
         path = self.snapshot_path(table, snap)
-        df = spark.read.parquet(path)
-        try:
-            with open(os.path.join(path, "_TBLMETA.json")) as f:
-                drop = json.load(f).get("drop_on_read", [])
-        except (FileNotFoundError, json.JSONDecodeError):
-            drop = []
-        for c in drop:
-            if c in df.columns:
-                df = df.drop(c)
-        return df
+        meta = self._read_meta(path)
+        df = self._reader(spark, meta.get("schema")).parquet(path)
+        return df.drop(*meta.get("drop_on_read", []))
+
+    @staticmethod
+    def _reader(spark: SparkSession, schema: dict[str, Any] | None) -> DataFrameReader:
+        if schema is None:
+            return spark.read
+        return spark.read.schema(StructType.fromJson(schema))
 
     def rollback(self, table: str, snapshot: int) -> None:
         if not os.path.isdir(self.snapshot_path(table, snapshot)):
@@ -189,7 +228,16 @@ class SnapshotStore:
         self._advance(table, snapshot, mode=mode)
 
     def expire_snapshots(self, table: str, keep: int = 2) -> None:
-        """Drop all but the newest `keep` snapshots (Iceberg expire_snapshots)."""
+        """Drop all but the newest `keep` snapshots (Iceberg expire_snapshots).
+
+        Refuses append tables: each of their snapshots holds only its
+        increment and `read` unions them all, so dropping one would
+        delete committed rows."""
+        if self._is_append(table):
+            raise ValueError(
+                f"table {table} is append-mode; its snapshots are "
+                "increments, so expiring one would delete committed rows"
+            )
         cur = self.current_snapshot(table)
         if cur is None:
             return

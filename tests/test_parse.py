@@ -347,3 +347,55 @@ def test_skip_truncated(spark):
         "http://h.example.com/hdr",
         "http://h.example.com/bad",
     }
+
+
+@pytest.mark.parametrize("scoped", [False, True])
+def test_normalizer_planned_once(spark, scoped):
+    """Each with_normalized call plans ONE normalizer evaluation: the
+    downstream accept_urls filter on its output must not be pushed
+    below it (that re-ran the UDF in every scan task as well as after
+    the slow side's repartition), on the outlink slow path and on the
+    redirect branch; the rows stay those of the per-row normalizer."""
+    from nutch_spark.functions.urlplugins import ScopedNormalizers
+    from nutch_spark.functions.urls import normalize_url
+    from nutch_spark.operators.parse import (
+        crawl_parse_from, extract_pages, finish_pages,
+    )
+
+    norm = (
+        ScopedNormalizers(chains={"default": [normalize_url]})
+        if scoped else None
+    )
+    udf_name = "_apply(" if scoped else "normalize_urls("
+    df = spark.createDataFrame(
+        [
+            fetch_result_row(
+                "http://a.site.com/p",
+                spans_of(("media", "http://b.site.com/in/../x"),
+                         ("media", "http://b.site.com/y")),
+            ),
+            fetch_result_row(
+                "http://a.site.com/q", None, status=STATUS_FETCH_REDIR_PERM,
+                redirect_to="http://a.site.com/./t",
+            ),
+        ],
+        FETCH_RESULTS,
+    )
+
+    def n_evals(d):
+        plan = d._jdf.queryExecution().sparkPlan().toString()
+        return sum(
+            1 for ln in plan.splitlines()
+            if "ArrowEvalPython" in ln and udf_name in ln.split("],")[0]
+        )
+
+    pd_ = finish_pages(extract_pages(df), normalizers=norm)
+    assert n_evals(pd_) == 1
+    rows = pd_.collect()
+    assert [o.to_url for o in rows[0].outlinks] == [
+        "http://b.site.com/x", "http://b.site.com/y"
+    ]
+    cp = crawl_parse_from(pd_.localCheckpoint(), df, normalizers=norm)
+    assert n_evals(cp) == 1
+    linked = cp.filter(F.col("from_url") == "http://a.site.com/q").collect()
+    assert [r.url for r in linked] == ["http://a.site.com/t"]
