@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import time
 from dataclasses import dataclass
 
@@ -35,7 +34,8 @@ from .operators.generate import generate, mark_generated
 from .operators.inject import inject
 from .operators.linkdb import invert_links
 from .operators.parse import crawl_parse_from, extract_pages, finish_pages
-from .operators.updatedb import updatedb
+from .operators.seen import CuckooSeenFilter, SeenTable, make_filter
+from .operators.updatedb import updatedb, updatedb_seen_split
 
 
 def _OPIC():
@@ -118,64 +118,8 @@ class Crawler:
         self.web = web
         self.cfg = cfg or CrawlConfig()
         self.robots = {r["host"]: r for r in robots_rows(web)}
-        self._seen = self._make_seen_filter()
-
-    def _make_seen_filter(self):
-        kind = self.cfg.seen_filter
-        if kind is None:
-            return None
-        params = self.cfg.seen_params
-        if kind == "bloom":
-            from .operators.seen import SeenFilter
-
-            return SeenFilter(**(params or dict(
-                n_buckets=32, expected_keys_per_bucket=200_000)))
-        if kind == "cuckoo":
-            from .operators.seen import CuckooSeenFilter
-
-            return CuckooSeenFilter(**(params or dict(
-                n_shards=32, m_indexes=1 << 14)))
-        raise ValueError(f"unknown seen_filter {kind!r}")
-
-    def _seen_geometry_file(self) -> str:
-        return os.path.join(self.store.root, "seen", "GEOMETRY.json")
-
-    def _stored_seen_geometry(self) -> dict | None:
-        try:
-            with open(self._seen_geometry_file()) as f:
-                return json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return None
-
-    def _write_seen(self, seen: DataFrame) -> None:
-        """Commit a (re)built seen table plus its geometry sidecar —
-        the table is only probe-compatible with a filter of identical
-        geometry (seen.py geometry()); incremental add()/delete()
-        writes keep the geometry, so only builds pass through here."""
-        self.store.write(seen, "seen")
-        path = self._seen_geometry_file()
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "w") as f:
-            json.dump(self._seen.geometry(), f)
-
-    def _ensure_seen(self) -> DataFrame:
-        """Read the seen table, (re)building it from the current
-        frontier if absent — covering resume from a pre-filter
-        warehouse — or if the stored geometry sidecar doesn't match
-        this filter's (resume with changed seen_filter/seen_params):
-        probing a mismatched table misreads bucket ids / bit positions
-        as unseen, which is the one failure mode the split can't
-        tolerate. The invariant the routing correctness rests on: the
-        filter answers maybe_seen = True for EVERY url in the frontier
-        (over-approximation is always safe — a false positive just
-        takes the big join's lone-link branch; an under-approximation
-        would double-create rows, so keys are only ever added, never
-        dropped, except for cuckoo deletes of purged-and-not-recreated
-        URLs)."""
-        if (not self.store.exists("seen")
-                or self._stored_seen_geometry() != self._seen.geometry()):
-            self._write_seen(self._seen.build(self._frontier()))
-        return self.store.read(self.spark, "seen")
+        self._seen = make_filter(self.cfg.seen_filter, self.cfg.seen_params)
+        self._seen_table = SeenTable(spark, store, self._seen)
 
     # -- helpers --
     def _plugin_kwargs(self, stage: str) -> dict:
@@ -200,10 +144,7 @@ class Crawler:
     def _frontier(self) -> DataFrame | None:
         if not self.store.exists("frontier"):
             return None
-        fr = self.store.read(self.spark, "frontier")
-        if "host_bucket" in fr.columns:
-            fr = fr.drop("host_bucket")
-        return fr
+        return self.store.read(self.spark, "frontier")
 
     def _write_frontier(self, fr: DataFrame) -> None:
         n = self.cfg.frontier_host_buckets
@@ -233,12 +174,16 @@ class Crawler:
             self.spark, self._frontier(), seeds, self.cfg.start_time_ms,
             **self._plugin_kwargs("inject"),
         )
+        self._seen_table.invalidate()
         self._write_frontier(fr)
         if self._seen is not None:
             # build the URL-seen structure over the injected frontier —
             # one shuffle on bucket/shard, each partition builds its
-            # slice independently (seen.py build)
-            self._write_seen(
+            # slice independently (seen.py build). The first updatedb's
+            # SeenTable.read would build it too; building here keeps the
+            # stored table covering the frontier for a direct store read
+            # of `seen` before then (its n_keys right after inject)
+            self._seen_table.commit(
                 self._seen.build(self.store.read(self.spark, "frontier"))
             )
         self._write_metrics(self.store.read(self.spark, "frontier"), "inject", "inject")
@@ -340,9 +285,10 @@ class Crawler:
                 )
             if self.cfg.dedup_each_cycle:
                 fr2 = dedup(fr2)
+            self._seen_table.invalidate()
             self._write_frontier(fr2)
             if seen_next is not None:
-                self.store.write(seen_next, "seen")
+                self._seen_table.commit(seen_next)
             self._write_metrics(
                 self.store.read(self.spark, "frontier"), seg, "updatedb"
             )
@@ -356,13 +302,10 @@ class Crawler:
         """UpdateDb with the URL-seen filter pruning the frontier join
         (the shared split core lives in updatedb_seen_split — routing
         semantics, narrow probe, and the filter ⊇ frontier invariant
-        are documented there; _ensure_seen maintains the invariant).
+        are documented there; seen.SeenTable maintains the invariant).
         Additionally, with cuckoo + purge_404, purged-and-not-recreated
         keys are delete()d so they can be re-discovered later."""
-        from .operators.seen import CuckooSeenFilter
-        from .operators.updatedb import updatedb_seen_split
-
-        seen_tbl = self._ensure_seen()
+        seen_tbl = self._seen_table.read(fr)
         # the delete path is only membership-safe if every created row
         # owns an inserted fingerprint copy — including false-positive
         # creations (see updatedb_seen_split's insert_created contract)

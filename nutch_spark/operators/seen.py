@@ -1,4 +1,5 @@
-"""URL-seen filter — partitioned blocked bloom over canonical URL hashes.
+"""URL-seen filter — a partitioned bloom or sharded cuckoo filter over
+canonical URL hashes, and the one owner of the stored seen table.
 
 Replaces the reference's implicit URL-seen set (the CrawlDb MapFile key
 set — CrawlDbReducer creates a row per never-seen URL and existence is
@@ -7,21 +8,27 @@ the explicit bloom/cuckoo structure the north rule calls for:
 
   * key = xxhash64(canonicalized url) — the same `url_hash` column the
     frontier carries (functions/urls.url_hash_col);
-  * the filter is PARTITIONED: bucket = url_hash mod n_buckets; each
-    bucket is an independent bloom bitset built per-partition with
-    applyInPandas (all-NumPy, no per-row Python) and stored as one row
-    (bucket, bitset, n_keys) in a sidecar table — at 10^10-URL scale
-    each bucket holds ~10^10/n_buckets keys and buckets build/probe in
-    parallel with no shared state;
-  * probing joins candidates to their bucket row (bucket count is
-    small ⇒ broadcast) and runs a vectorized double-hashing membership
-    test inside one pandas batch;
-  * incremental maintenance: per cycle, OR the delta bitsets of newly
-    added URLs into the affected buckets — no global rebuild;
+  * the filter is PARTITIONED: shard = pmod(url_hash, n_shards); each
+    shard is an independent structure (a bloom bitset, or a cuckoo
+    table plus overflow stash) stored as one row of the seen table —
+    at 10^10-URL scale each shard holds ~10^10/n_shards keys and
+    shards build/probe in parallel with no shared state;
+  * `_ShardedFilter` is the one Spark skeleton of both filters: build
+    (one shuffle on the shard key, one NumPy batch per shard), the one
+    cogroup shard-rewrite program behind add() and the cuckoo's
+    delete() — no global rebuild per cycle — and the probe, where
+    candidates test against an RDD-broadcast dict of shard rows, or
+    cogroup with their shard row once the table is too large to
+    broadcast. `SeenFilter` and `CuckooSeenFilter` supply only their
+    geometry and per-shard NumPy kernels;
   * false positives lose only *new* outlinks (they are wrongly treated
     as already-known). `unseen_exact` is the audit path: a left-anti
     join against the frontier, used in tests to measure the FP rate
-    and as the exact fallback.
+    and as the exact fallback;
+  * `SeenTable` owns the stored table for every writer of the frontier
+    (the crawl loop, the streaming merge, the server's /seed): the
+    geometry check with rebuild and the commit of table plus geometry,
+    which together keep the filter ⊇ frontier invariant.
 
 Bloom math: k = round(bits_per_key·ln2) hash functions via double
 hashing h_i = h1 + i·h2 (Kirsch–Mitzenmacher), h1/h2 drawn from the
@@ -31,7 +38,9 @@ ops over uint8 arrays.
 
 from __future__ import annotations
 
+import json
 import math
+import os
 
 import numpy as np
 import pandas as pd
@@ -80,8 +89,190 @@ def _contains(bitset: bytes, hashes: np.ndarray, m_bits: int, k: int) -> np.ndar
     return ((bits[byte_idx] & masks) == masks).all(axis=1)
 
 
-class SeenFilter:
-    """Config + operations for the partitioned URL-seen bloom."""
+class _ShardedFilter:
+    """The Spark programs of a URL-seen filter sharded on
+    pmod(url_hash, n_shards), whatever its per-shard structure.
+
+    A subclass names its table — `_KEY` (shard column), `_PAYLOAD`
+    (binary state columns), `_SCHEMA` — plus `n_shards` and
+    `_shard_bytes()`, and supplies NumPy kernels over one shard's
+    state: `_empty()` a fresh state, `_load(*payload)` a mutable copy
+    of a stored row's, `_dump(state)` the row's payload bytes,
+    `_insert(state, h)` adds int64 keys and returns the `n_keys` delta,
+    `_hits(payload, h)` tests keys against a stored row."""
+
+    # Above this configured table size the probe switches from the
+    # driver-broadcast shape to the partitioned cogroup (the driver
+    # never materializes the table).
+    BROADCAST_LIMIT_BYTES = 64 << 20
+
+    def shard_col(self, url_hash):
+        return F.pmod(url_hash, F.lit(self.n_shards)).cast("int")
+
+    def _keyed(self, df: DataFrame) -> DataFrame:
+        return df.select(
+            self.shard_col(F.col("url_hash")).alias(self._KEY), "url_hash"
+        )
+
+    def _rewrite_shard(self, op, old: pd.DataFrame | None,
+                       new: pd.DataFrame) -> pd.DataFrame:
+        """One shard's next row: `op` over the state stored in `old`
+        (a fresh state when it holds no row) and the keys in `new`."""
+        if old is not None and len(old):
+            row = old.iloc[0]
+            state = self._load(*(row[c] for c in self._PAYLOAD))
+            n = int(row["n_keys"])
+        else:
+            row, state, n = new.iloc[0], self._empty(), 0
+        h = (new["url_hash"].to_numpy(dtype=np.int64) if len(new)
+             else np.zeros(0, dtype=np.int64))
+        n += op(state, h)
+        return pd.DataFrame({
+            self._KEY: [int(row[self._KEY])],
+            **{c: [b] for c, b in zip(self._PAYLOAD, self._dump(state))},
+            "n_keys": [n],
+        })
+
+    def build(self, frontier: DataFrame) -> DataFrame:
+        """frontier(url_hash, …) → the seen table, one row per shard.
+
+        One shuffle on the shard key; each shard builds independently
+        as one NumPy batch inside applyInPandas."""
+        return self._keyed(frontier).groupBy(self._KEY).applyInPandas(
+            lambda pdf: self._rewrite_shard(self._insert, None, pdf),
+            self._SCHEMA,
+        )
+
+    def _rewrite(self, seen: DataFrame, keys: DataFrame, op,
+                 create: bool) -> DataFrame:
+        """The shard-rewrite program: cogroup each stored shard row with
+        its delta keys and rewrite it once through `op`. A shard with
+        keys but no row starts from a fresh state if `create`, else
+        stays absent."""
+        empty = pd.DataFrame(columns=self._SCHEMA.fieldNames()).astype(
+            {self._KEY: "int32", "n_keys": "int64"}
+        )
+
+        def rewrite(old: pd.DataFrame, new: pd.DataFrame) -> pd.DataFrame:
+            if not len(old) and not create:
+                return empty
+            return self._rewrite_shard(op, old, new)
+
+        return (
+            seen.groupBy(self._KEY)
+            .cogroup(self._keyed(keys).groupBy(self._KEY))
+            .applyInPandas(rewrite, self._SCHEMA)
+        )
+
+    def add(self, seen: DataFrame, new_urls: DataFrame) -> DataFrame:
+        """Insert new url_hashes into the stored shards. No rebuild:
+        each shard row rewrites once.
+
+        `n_keys` is an UPPER-BOUND insert counter, not a distinct-member
+        count (no prior-membership probe): a key added twice counts
+        twice — for the cuckoo it also occupies a second slot, while
+        delete() decrements only on a successful removal. Callers keep
+        it exact by feeding add() only definitely-new keys (the crawl
+        loop feeds the maybe_seen=False set, which cannot already be
+        present); fed overlapping deltas, load-factor math should treat
+        it as a ceiling."""
+        return self._rewrite(seen, new_urls, self._insert, create=True)
+
+    def mark_seen(self, candidates: DataFrame, seen: DataFrame,
+                  url_hash_col: str = "url_hash",
+                  mode: str = "auto") -> DataFrame:
+        """Add boolean `maybe_seen` to candidates (true ⇒ probably in
+        the frontier; false ⇒ DEFINITELY new — the useful guarantee).
+        A candidate whose shard has no row is definitely new.
+
+        Two physical shapes, same result:
+
+        * ``broadcast`` — the shard table is collected once and RDD-
+          broadcast as a dict; each Arrow batch probes against it in
+          NumPy. (A broadcast JOIN instead would materialize the
+          megabyte shard payload into every candidate row and push it
+          through Arrow per row — measured ~90 s for a 1.5k-candidate
+          probe.) Right while the whole table fits comfortably in
+          driver/executor memory.
+        * ``partitioned`` — the 10^10-frontier shape: candidates
+          shuffle once on the shard key and COGROUP with the seen
+          table, so each task sees (its candidates, its single shard
+          row) and probes in one NumPy batch. No driver collect, no
+          broadcast; each shard row moves over the wire once.
+
+        ``auto`` picks by the configured table size
+        (n_shards × shard bytes vs BROADCAST_LIMIT_BYTES) — a static
+        decision from filter config, not a data scan."""
+        if mode == "auto":
+            table_bytes = self.n_shards * self._shard_bytes()
+            mode = (
+                "broadcast"
+                if table_bytes <= self.BROADCAST_LIMIT_BYTES
+                else "partitioned"
+            )
+        out_schema = T.StructType(
+            list(candidates.schema.fields)
+            + [T.StructField("maybe_seen", T.BooleanType())]
+        )
+        if mode == "partitioned":
+            def probe(cpdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
+                res = cpdf.drop(columns=["__shard"])
+                if len(spdf) and len(cpdf):
+                    res["maybe_seen"] = self._hits(
+                        tuple(spdf[c].iloc[0] for c in self._PAYLOAD),
+                        cpdf[url_hash_col].to_numpy(dtype=np.int64),
+                    )
+                else:
+                    res["maybe_seen"] = np.zeros(len(cpdf), dtype=bool)
+                return res
+
+            cand = candidates.withColumn(
+                "__shard", self.shard_col(F.col(url_hash_col))
+            )
+            return (
+                cand.groupBy("__shard")
+                .cogroup(seen.groupBy(self._KEY))
+                .applyInPandas(probe, out_schema)
+            )
+        table = {
+            int(r[0]): tuple(bytes(b) for b in r[1:])
+            for r in seen.select(self._KEY, *self._PAYLOAD).collect()
+        }
+        bc = candidates.sparkSession.sparkContext.broadcast(table)
+        ns = self.n_shards
+
+        def probe_batches(batches):
+            tbl = bc.value
+            for pdf in batches:
+                hv = pdf[url_hash_col].to_numpy(dtype=np.int64)
+                shards = hv % ns  # ≙ F.pmod: non-negative for ns > 0
+                out = np.zeros(len(pdf), dtype=bool)
+                for s in np.unique(shards):
+                    payload = tbl.get(int(s))
+                    if payload is None:
+                        continue
+                    mask = shards == s
+                    out[mask] = self._hits(payload, hv[mask])
+                res = pdf.copy()
+                res["maybe_seen"] = out
+                yield res
+
+        return candidates.mapInPandas(probe_batches, out_schema)
+
+    def unseen(self, candidates: DataFrame, seen: DataFrame,
+               url_hash_col: str = "url_hash",
+               mode: str = "auto") -> DataFrame:
+        """Candidates definitely not in the seen set (no false
+        negatives: every inserted key still answers maybe_seen)."""
+        return self.mark_seen(candidates, seen, url_hash_col, mode).filter(
+            ~F.col("maybe_seen")
+        ).drop("maybe_seen")
+
+
+class SeenFilter(_ShardedFilter):
+    """Partitioned URL-seen bloom: shard ("bucket") = one bitset."""
+
+    _KEY, _PAYLOAD, _SCHEMA = "bucket", ("bitset",), SEEN_SCHEMA
 
     def __init__(self, n_buckets: int = 64, bits_per_key: float = 10.0,
                  expected_keys_per_bucket: int = 1_000_000):
@@ -92,186 +283,41 @@ class SeenFilter:
         m = int(expected_keys_per_bucket * bits_per_key)
         self.m_bits = max(64, (m + 7) // 8 * 8)
 
-    # -- column helpers --
-    def bucket_col(self, url_hash):
-        return F.pmod(url_hash, F.lit(self.n_buckets)).cast("int")
+    @property
+    def n_shards(self) -> int:
+        return self.n_buckets
 
     def geometry(self) -> dict:
         """Probe-compatibility fingerprint. A stored seen table is only
         meaningful to a filter with the SAME geometry — probing a
         table built under a different bucketing/bit-space silently
         reads absent buckets / wrong bit positions as unseen (false
-        negatives → double-created rows). Persist alongside the table
-        and rebuild on mismatch (Crawler._ensure_seen does)."""
+        negatives → double-created rows). SeenTable persists it with
+        the table and rebuilds on mismatch."""
         return {"kind": "bloom", "n_buckets": self.n_buckets,
                 "m_bits": self.m_bits, "k": self.k}
 
-    # -- build --
-    def build(self, frontier: DataFrame) -> DataFrame:
-        """frontier(url_hash, …) → seen table (bucket, bitset, n_keys).
+    # -- per-shard kernels --
+    def _shard_bytes(self) -> int:
+        return self.m_bits // 8
 
-        One shuffle on bucket; each bucket builds independently
-        (mapInPandas-style vectorized NumPy inside applyInPandas).
-        """
-        m_bits, k = self.m_bits, self.k
+    def _empty(self) -> np.ndarray:
+        return np.zeros(self._shard_bytes(), dtype=np.uint8)
 
-        def build_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            hashes = pdf["url_hash"].to_numpy(dtype=np.int64)
-            return pd.DataFrame(
-                {
-                    "bucket": [int(pdf["bucket"].iloc[0])],
-                    "bitset": [_build_bitset(hashes, m_bits, k)],
-                    "n_keys": [len(hashes)],
-                }
-            )
+    def _load(self, bitset: bytes) -> np.ndarray:
+        return np.frombuffer(bitset, dtype=np.uint8).copy()
 
-        keyed = frontier.select(
-            self.bucket_col(F.col("url_hash")).alias("bucket"), "url_hash"
+    def _dump(self, bits: np.ndarray) -> tuple[bytes]:
+        return (bits.tobytes(),)
+
+    def _insert(self, bits: np.ndarray, h: np.ndarray) -> int:
+        bits |= np.frombuffer(
+            _build_bitset(h, self.m_bits, self.k), dtype=np.uint8
         )
-        return keyed.groupBy("bucket").applyInPandas(build_bucket, SEEN_SCHEMA)
+        return len(h)
 
-    # -- incremental add --
-    def add(self, seen: DataFrame, new_urls: DataFrame) -> DataFrame:
-        """OR the delta bitsets of new url_hashes into existing buckets.
-
-        `n_keys` (k_old + k_new) is an upper-bound insert counter, not
-        a distinct-member count: re-added keys set no new bits but do
-        count. The crawl loop feeds only definitely-new keys, keeping
-        it exact; treat it as a ceiling for bits-per-key math
-        otherwise."""
-        delta = self.build(new_urls)
-        m_bits = self.m_bits
-
-        a = seen.select("bucket", F.col("bitset").alias("b_old"), F.col("n_keys").alias("k_old"))
-        b = delta.select("bucket", F.col("bitset").alias("b_new"), F.col("n_keys").alias("k_new"))
-        j = a.join(b, "bucket", "full_outer")
-
-        @F.pandas_udf(T.BinaryType())
-        def or_bits(old: pd.Series, new: pd.Series) -> pd.Series:
-            out = []
-            for o, n in zip(old, new):
-                if o is None:
-                    out.append(n)
-                elif n is None:
-                    out.append(o)
-                else:
-                    out.append(
-                        (
-                            np.frombuffer(o, dtype=np.uint8)
-                            | np.frombuffer(n, dtype=np.uint8)
-                        ).tobytes()
-                    )
-            return pd.Series(out)
-
-        return j.select(
-            "bucket",
-            or_bits(F.col("b_old"), F.col("b_new")).alias("bitset"),
-            (F.coalesce("k_old", F.lit(0)) + F.coalesce("k_new", F.lit(0))).alias("n_keys"),
-        )
-
-    # -- probe --
-    # Above this estimated bucket-table size the probe switches from the
-    # driver-broadcast path to the partitioned cogroup path (the driver
-    # never materializes the table).
-    BROADCAST_LIMIT_BYTES = 64 << 20
-
-    def mark_seen(self, candidates: DataFrame, seen: DataFrame,
-                  url_hash_col: str = "url_hash",
-                  mode: str = "auto") -> DataFrame:
-        """Add boolean `maybe_seen` to candidates (true ⇒ probably in
-        the frontier; false ⇒ DEFINITELY new — the useful guarantee).
-
-        Two physical shapes, same result:
-
-        * ``broadcast`` — the bucket table is collected once and RDD-
-          broadcast; each Arrow batch probes against it in NumPy. (A
-          broadcast JOIN instead would materialize the megabyte bitset
-          into every candidate row and push it through Arrow per row —
-          measured ~90 s for a 1.5k-candidate probe.) Right while the
-          whole table fits comfortably in driver/executor memory.
-        * ``partitioned`` — the 10^10-frontier shape: candidates
-          shuffle once on bucket and COGROUP with the seen table, so
-          each task sees (its candidates, its single bucket row) and
-          probes in one NumPy batch. No driver collect, no broadcast;
-          each bitset moves over the wire exactly once per bucket.
-
-        ``auto`` picks by the configured table size
-        (n_buckets × m_bits/8 vs BROADCAST_LIMIT_BYTES) — a static
-        decision from filter config, not a data scan."""
-        if mode == "auto":
-            table_bytes = self.n_buckets * (self.m_bits // 8)
-            mode = (
-                "broadcast"
-                if table_bytes <= self.BROADCAST_LIMIT_BYTES
-                else "partitioned"
-            )
-        if mode == "partitioned":
-            return self._mark_seen_partitioned(candidates, seen, url_hash_col)
-        m_bits, k, nb = self.m_bits, self.k, self.n_buckets
-        table = {int(r.bucket): r.bitset for r in seen.collect()}
-        bc = candidates.sparkSession.sparkContext.broadcast(table)
-
-        def probe_batches(batches):
-            tbl = bc.value
-            for pdf in batches:
-                hv = pdf[url_hash_col].to_numpy(dtype=np.int64)
-                buckets = hv % nb  # ≙ F.pmod: non-negative for nb > 0
-                out = np.zeros(len(pdf), dtype=bool)
-                for b in np.unique(buckets):
-                    bs = tbl.get(int(b))
-                    if bs is None:
-                        continue  # empty bucket ⇒ definitely unseen
-                    mask = buckets == b
-                    out[mask] = _contains(bs, hv[mask], m_bits, k)
-                res = pdf.copy()
-                res["maybe_seen"] = out
-                yield res
-
-        out_schema = T.StructType(
-            list(candidates.schema.fields)
-            + [T.StructField("maybe_seen", T.BooleanType())]
-        )
-        return candidates.mapInPandas(probe_batches, out_schema)
-
-    def _mark_seen_partitioned(
-        self, candidates: DataFrame, seen: DataFrame, url_hash_col: str
-    ) -> DataFrame:
-        """Cogroup candidates with their bucket row — one shuffle keyed
-        on bucket, one NumPy probe per (bucket-candidates, bitset)
-        pair. Scales to bucket tables far beyond broadcast size."""
-        m_bits, k = self.m_bits, self.k
-        cand = candidates.withColumn(
-            "__bucket", self.bucket_col(F.col(url_hash_col))
-        )
-        out_schema = T.StructType(
-            list(candidates.schema.fields)
-            + [T.StructField("maybe_seen", T.BooleanType())]
-        )
-
-        def probe(cpdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
-            res = cpdf.drop(columns=["__bucket"])
-            if len(spdf) and len(cpdf):
-                hv = cpdf[url_hash_col].to_numpy(dtype=np.int64)
-                res["maybe_seen"] = _contains(
-                    spdf["bitset"].iloc[0], hv, m_bits, k
-                )
-            else:  # no bucket row ⇒ nothing of this bucket ever seen
-                res["maybe_seen"] = np.zeros(len(cpdf), dtype=bool)
-            return res
-
-        return (
-            cand.groupBy("__bucket")
-            .cogroup(seen.groupBy("bucket"))
-            .applyInPandas(probe, out_schema)
-        )
-
-    def unseen(self, candidates: DataFrame, seen: DataFrame,
-               url_hash_col: str = "url_hash",
-               mode: str = "auto") -> DataFrame:
-        """Candidates definitely not in the seen set (bloom-pruned)."""
-        return self.mark_seen(candidates, seen, url_hash_col, mode).filter(
-            ~F.col("maybe_seen")
-        ).drop("maybe_seen")
+    def _hits(self, payload: tuple[bytes], h: np.ndarray) -> np.ndarray:
+        return _contains(payload[0], h, self.m_bits, self.k)
 
 
 def unseen_exact(candidates: DataFrame, frontier: DataFrame, key: str = "url") -> DataFrame:
@@ -281,7 +327,7 @@ def unseen_exact(candidates: DataFrame, frontier: DataFrame, key: str = "url") -
 
 # ---------------------------------------------------------------------
 # Cuckoo-filter URL-seen — the north rule's other option ("partitioned
-# bloom/cuckoo filter"). Same sharded architecture as SeenFilter, but
+# bloom/cuckoo filter"). Same skeleton (_ShardedFilter) as SeenFilter;
 # the per-shard structure is a cuckoo filter (Fan, Andersen,
 # Kaminsky, Mitzenmacher: "Cuckoo Filter: Practically Better Than
 # Bloom", CoNEXT 2014): a table of m indexes × `slots` entries, each
@@ -359,17 +405,11 @@ def _group_counts(idx: np.ndarray, f16: np.ndarray):
         yield int(u >> 16), np.uint16(u & 0xFFFF), int(c)
 
 
-class CuckooSeenFilter:
-    """Sharded cuckoo-filter URL-seen set.
+class CuckooSeenFilter(_ShardedFilter):
+    """Sharded cuckoo-filter URL-seen set: shard = one (table, stash)
+    pair, built/probed/rewritten by the same skeleton as SeenFilter."""
 
-    shard = pmod(url_hash, n_shards); each shard is an independent
-    (table, stash) pair built/probed as one NumPy batch — identical
-    distribution story to SeenFilter (build: one shuffle on shard;
-    probe: broadcast table or cogroup-per-shard, chosen by configured
-    table size).
-    """
-
-    BROADCAST_LIMIT_BYTES = SeenFilter.BROADCAST_LIMIT_BYTES
+    _KEY, _PAYLOAD, _SCHEMA = "shard", ("table", "stash"), CUCKOO_SCHEMA
 
     def __init__(self, n_shards: int = 64, m_indexes: int = 1 << 18,
                  slots: int = 4):
@@ -379,15 +419,51 @@ class CuckooSeenFilter:
         self.m = m_indexes
         self.slots = slots
 
-    def shard_col(self, url_hash):
-        return F.pmod(url_hash, F.lit(self.n_shards)).cast("int")
-
     def geometry(self) -> dict:
         """Probe-compatibility fingerprint — see SeenFilter.geometry."""
         return {"kind": "cuckoo", "n_shards": self.n_shards,
                 "m_indexes": self.m, "slots": self.slots}
 
-    # -- core NumPy kernels (per shard) --
+    def delete(self, seen: DataFrame, gone_urls: DataFrame) -> DataFrame:
+        """Remove ONE stored occurrence per deleted url_hash (slot at
+        i1, else i2, else exact stash key) — the filter operation
+        blooms can't do. Canonical caveat (paper §3.2): only delete
+        keys that were inserted; a delete may remove another key's
+        identical fingerprint at a shared index, which stays
+        membership-safe because the probe matches the survivor. The
+        per-shard kernel is the order-independent two-round _remove."""
+        return self._rewrite(seen, gone_urls, self._drop, create=False)
+
+    # -- per-shard kernels --
+    def _shard_bytes(self) -> int:
+        return self.m * self.slots * 2
+
+    def _empty(self) -> tuple[np.ndarray, list[int]]:
+        return np.zeros((self.m, self.slots), dtype=np.uint16), []
+
+    def _load(self, table: bytes, stash: bytes) -> tuple[np.ndarray, list[int]]:
+        return (
+            np.frombuffer(table, dtype=np.uint16)
+            .reshape(self.m, self.slots).copy(),
+            np.frombuffer(stash, dtype=np.int64).tolist(),
+        )
+
+    def _dump(self, state) -> tuple[bytes, bytes]:
+        table, stash = state
+        return table.tobytes(), np.asarray(stash, dtype=np.int64).tobytes()
+
+    def _insert(self, state, h: np.ndarray) -> int:
+        h = np.unique(h)
+        self._place(h, *state)
+        return len(h)
+
+    def _drop(self, state, h: np.ndarray) -> int:
+        return -self._remove(np.unique(h), *state)
+
+    def _hits(self, payload: tuple[bytes, bytes], h: np.ndarray) -> np.ndarray:
+        return self._probe(*payload, h)
+
+    # -- placement / probe / removal over one shard --
     def _place(self, h_sorted: np.ndarray, table: np.ndarray,
                stash: list[int]) -> None:
         """Two-round greedy placement of DISTINCT sorted keys into
@@ -438,85 +514,6 @@ class CuckooSeenFilter:
         if len(stash):
             hit |= np.isin(h, stash)
         return hit
-
-    # -- build / add / delete --
-    def build(self, frontier: DataFrame) -> DataFrame:
-        """frontier(url_hash, …) → (shard, table, stash, n_keys)."""
-        filt = self
-
-        def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            h = np.unique(pdf["url_hash"].to_numpy(dtype=np.int64))
-            table = np.zeros((filt.m, filt.slots), dtype=np.uint16)
-            stash: list[int] = []
-            filt._place(h, table, stash)
-            return pd.DataFrame(
-                {
-                    "shard": [int(pdf["shard"].iloc[0])],
-                    "table": [table.tobytes()],
-                    "stash": [np.asarray(stash, dtype=np.int64).tobytes()],
-                    "n_keys": [len(h)],
-                }
-            )
-
-        keyed = frontier.select(
-            self.shard_col(F.col("url_hash")).alias("shard"), "url_hash"
-        )
-        return keyed.groupBy("shard").applyInPandas(build_shard, CUCKOO_SCHEMA)
-
-    def add(self, seen: DataFrame, new_urls: DataFrame) -> DataFrame:
-        """Insert new url_hashes into existing shard tables — free
-        slots first (i1 then i2), stash overflow appended. No rebuild;
-        each shard row rewrites once (the same incremental contract as
-        SeenFilter.add's bitset OR).
-
-        `n_keys` is an UPPER-BOUND insert counter (n0 + batch-unique
-        keys, no prior-membership probe): a key added twice counts —
-        and occupies a slot — twice, while delete() decrements only on
-        a successful removal. Callers keep it exact by feeding add()
-        only definitely-new keys (the crawl loop feeds the
-        maybe_seen=False set, which cannot already be present); fed
-        overlapping deltas, the counter tracks inserts, not distinct
-        members, and load-factor math should treat it as a ceiling."""
-        filt = self
-        delta = new_urls.select(
-            self.shard_col(F.col("url_hash")).alias("shard"), "url_hash"
-        )
-
-        def merge(spdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
-            shard = int(
-                (spdf if len(spdf) else dpdf)["shard"].iloc[0]
-            )
-            if len(spdf):
-                table = np.frombuffer(
-                    spdf["table"].iloc[0], dtype=np.uint16
-                ).reshape(filt.m, filt.slots).copy()
-                stash = np.frombuffer(
-                    spdf["stash"].iloc[0], dtype=np.int64
-                ).tolist()
-                n0 = int(spdf["n_keys"].iloc[0])
-            else:
-                table = np.zeros((filt.m, filt.slots), dtype=np.uint16)
-                stash, n0 = [], 0
-            h = (
-                np.unique(dpdf["url_hash"].to_numpy(dtype=np.int64))
-                if len(dpdf)
-                else np.zeros(0, dtype=np.int64)
-            )
-            filt._place(h, table, stash)
-            return pd.DataFrame(
-                {
-                    "shard": [shard],
-                    "table": [table.tobytes()],
-                    "stash": [np.asarray(stash, dtype=np.int64).tobytes()],
-                    "n_keys": [n0 + len(h)],
-                }
-            )
-
-        return (
-            seen.groupBy("shard")
-            .cogroup(delta.groupBy("shard"))
-            .applyInPandas(merge, CUCKOO_SCHEMA)
-        )
 
     def _remove(self, hs: np.ndarray, table: np.ndarray,
                 stash: list[int]) -> int:
@@ -574,131 +571,84 @@ class CuckooSeenFilter:
         stash[:] = stash_arr.tolist()
         return removed
 
-    def delete(self, seen: DataFrame, gone_urls: DataFrame) -> DataFrame:
-        """Remove ONE stored occurrence per deleted url_hash (slot at
-        i1, else i2, else exact stash key) — the filter operation
-        blooms can't do. Canonical caveat (paper §3.2): only delete
-        keys that were inserted; a delete may remove another key's
-        identical fingerprint at a shared index, which stays
-        membership-safe because the probe matches the survivor. The
-        per-shard kernel is the order-independent two-round _remove."""
-        filt = self
-        delta = gone_urls.select(
-            self.shard_col(F.col("url_hash")).alias("shard"), "url_hash"
-        )
 
-        def drop(spdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
-            if not len(spdf):
-                return pd.DataFrame(
-                    columns=["shard", "table", "stash", "n_keys"]
-                ).astype({"shard": "int32", "n_keys": "int64"})
-            shard = int(spdf["shard"].iloc[0])
-            table = np.frombuffer(
-                spdf["table"].iloc[0], dtype=np.uint16
-            ).reshape(filt.m, filt.slots).copy()
-            stash = np.frombuffer(
-                spdf["stash"].iloc[0], dtype=np.int64
-            ).tolist()
-            n = int(spdf["n_keys"].iloc[0])
-            hs = (
-                np.unique(dpdf["url_hash"].to_numpy(dtype=np.int64))
-                if len(dpdf)
-                else np.zeros(0, dtype=np.int64)
-            )
-            n -= filt._remove(hs, table, stash)
-            return pd.DataFrame(
-                {
-                    "shard": [shard],
-                    "table": [table.tobytes()],
-                    "stash": [np.asarray(stash, dtype=np.int64).tobytes()],
-                    "n_keys": [n],
-                }
-            )
+# The geometries Crawler gives CrawlConfig(seen_filter=...) when
+# seen_params is unset (perfbench's SEEN_GEOMETRY mirrors the cuckoo's).
+DEFAULT_PARAMS = {
+    "bloom": dict(n_buckets=32, expected_keys_per_bucket=200_000),
+    "cuckoo": dict(n_shards=32, m_indexes=1 << 14),
+}
 
-        return (
-            seen.groupBy("shard")
-            .cogroup(delta.groupBy("shard"))
-            .applyInPandas(drop, CUCKOO_SCHEMA)
-        )
 
-    # -- probe --
-    def mark_seen(self, candidates: DataFrame, seen: DataFrame,
-                  url_hash_col: str = "url_hash",
-                  mode: str = "auto") -> DataFrame:
-        """Add boolean `maybe_seen`; same broadcast/partitioned duality
-        and auto rule as SeenFilter.mark_seen."""
-        if mode == "auto":
-            table_bytes = self.n_shards * self.m * self.slots * 2
-            mode = (
-                "broadcast"
-                if table_bytes <= self.BROADCAST_LIMIT_BYTES
-                else "partitioned"
-            )
-        if mode == "partitioned":
-            return self._mark_seen_partitioned(candidates, seen, url_hash_col)
-        filt, ns = self, self.n_shards
-        table = {
-            int(r.shard): (bytes(r.table), bytes(r.stash))
-            for r in seen.collect()
-        }
-        bc = candidates.sparkSession.sparkContext.broadcast(table)
+def make_filter(kind: str | None, params: dict | None = None):
+    """The filter `CrawlConfig(seen_filter=kind, seen_params=params)`
+    names; None for no filter."""
+    if kind is None:
+        return None
+    classes = {"bloom": SeenFilter, "cuckoo": CuckooSeenFilter}
+    if kind not in classes:
+        raise ValueError(f"unknown seen_filter {kind!r}")
+    return classes[kind](**(params or DEFAULT_PARAMS[kind]))
 
-        def probe_batches(batches):
-            tbl = bc.value
-            for pdf in batches:
-                hv = pdf[url_hash_col].to_numpy(dtype=np.int64)
-                shards = hv % ns
-                out = np.zeros(len(pdf), dtype=bool)
-                for s in np.unique(shards):
-                    row = tbl.get(int(s))
-                    if row is None:
-                        continue
-                    mask = shards == s
-                    out[mask] = filt._probe(row[0], row[1], hv[mask])
-                res = pdf.copy()
-                res["maybe_seen"] = out
-                yield res
 
-        out_schema = T.StructType(
-            list(candidates.schema.fields)
-            + [T.StructField("maybe_seen", T.BooleanType())]
-        )
-        return candidates.mapInPandas(probe_batches, out_schema)
+class SeenTable:
+    """A warehouse's stored `seen` table, kept ⊇ the frontier.
 
-    def _mark_seen_partitioned(
-        self, candidates: DataFrame, seen: DataFrame, url_hash_col: str
-    ) -> DataFrame:
-        filt = self
-        cand = candidates.withColumn(
-            "__shard", self.shard_col(F.col(url_hash_col))
-        )
-        out_schema = T.StructType(
-            list(candidates.schema.fields)
-            + [T.StructField("maybe_seen", T.BooleanType())]
-        )
+    The updatedb split (updatedb_seen_split) is row-identical to the
+    plain merge only while the filter answers maybe_seen for EVERY
+    frontier URL: a false positive merely takes the big join's
+    lone-link branch, a false negative double-creates a row. So every
+    writer of the frontier goes through here:
 
-        def probe(cpdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
-            res = cpdf.drop(columns=["__shard"])
-            if len(spdf) and len(cpdf):
-                hv = cpdf[url_hash_col].to_numpy(dtype=np.int64)
-                res["maybe_seen"] = filt._probe(
-                    spdf["table"].iloc[0], spdf["stash"].iloc[0], hv
-                )
-            else:
-                res["maybe_seen"] = np.zeros(len(cpdf), dtype=bool)
-            return res
+      * `read` is the table to probe, (re)built over the frontier first
+        if it is absent — resume from a pre-filter warehouse — or was
+        committed under another geometry (resume with changed
+        seen_filter/seen_params), whose bucket ids / bit positions the
+        filter would misread as unseen;
+      * `invalidate` before a frontier write that can add keys, and
+        `commit` the maintained table after it: a crash in between
+        leaves no geometry, so the next `read` rebuilds. A writer with
+        no maintained table (the server's /seed) only invalidates.
 
-        return (
-            cand.groupBy("__shard")
-            .cogroup(seen.groupBy("shard"))
-            .applyInPandas(probe, out_schema)
-        )
+    The geometry file (seen/GEOMETRY.json) is removed before every
+    table commit and written after it, so a table is never probed under
+    a geometry it was not committed with. With no filter bound
+    (`filt=None`) a writer can only invalidate."""
 
-    def unseen(self, candidates: DataFrame, seen: DataFrame,
-               url_hash_col: str = "url_hash",
-               mode: str = "auto") -> DataFrame:
-        """Candidates definitely not in the seen set (no false
-        negatives: every inserted key is in a slot or the stash)."""
-        return self.mark_seen(candidates, seen, url_hash_col, mode).filter(
-            ~F.col("maybe_seen")
-        ).drop("maybe_seen")
+    def __init__(self, spark, store, filt):
+        self.spark = spark
+        self.store = store
+        self.filt = filt
+        self._geometry_path = os.path.join(store.root, "seen", "GEOMETRY.json")
+
+    def _current(self) -> bool:
+        """Whether the stored table was committed under `filt`'s geometry."""
+        try:
+            with open(self._geometry_path) as f:
+                stored = json.load(f)
+        except (FileNotFoundError, json.JSONDecodeError):
+            return False
+        return self.store.exists("seen") and stored == self.filt.geometry()
+
+    def read(self, frontier: DataFrame) -> DataFrame:
+        if not self._current():
+            self.commit(self.filt.build(frontier))
+        return self.store.read(self.spark, "seen")
+
+    def invalidate(self) -> None:
+        try:
+            os.remove(self._geometry_path)
+        except FileNotFoundError:
+            pass
+
+    def commit(self, seen: DataFrame) -> None:
+        """Commit `seen` — a build, or an add()/delete() of what `read`
+        returned — under the filter's geometry."""
+        self.invalidate()
+        self.store.write(seen, "seen")
+        self._record_geometry()
+
+    def _record_geometry(self) -> None:
+        os.makedirs(os.path.dirname(self._geometry_path), exist_ok=True)
+        with open(self._geometry_path, "w") as f:
+            json.dump(self.filt.geometry(), f)

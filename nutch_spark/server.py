@@ -15,7 +15,8 @@ MapReduce jobs, which Spark's driver supersedes):
   GET  /hostdb                hostdb rows (ReaderResouce-style dump)
   GET  /linkdb/<url>          inlinks of one URL (LinkDbReader -url)
   POST /seed                  {"urls": [...]} → inject into the
-                              frontier (SeedResource + Injector)
+                              frontier (SeedResource + Injector); the
+                              seen table is invalidated
   POST /job/cycle             run ONE generate→fetch→parse→updatedb
                               cycle synchronously; returns its stats
                               (JobResource, synchronous simplification)
@@ -143,6 +144,7 @@ def create_app(spark, store, web=None, cfg=None):
     @app.post("/seed")
     def seed():
         from .operators.inject import inject
+        from .operators.seen import SeenTable
 
         body = request.get_json(force=True) or {}
         urls = body.get("urls") or []
@@ -156,6 +158,9 @@ def create_app(spark, store, web=None, cfg=None):
             fr = store.read(spark, "frontier")
         now = int(body.get("now", time.time() * 1000))
         merged = inject(spark, fr, seeds, now)
+        # the injected keys are not in the stored seen table: invalidate
+        # it, so the next filtered cycle rebuilds it over the frontier
+        SeenTable(spark, store, None).invalidate()
         store.write(merged, "frontier")
         return jsonify({"frontier": store.read(spark, "frontier").count()})
 

@@ -25,7 +25,8 @@ from typing import Callable
 from pyspark.sql import functions as F
 
 from .operators.parse import crawl_parse_from, parse_pages
-from .operators.updatedb import updatedb
+from .operators.seen import SeenTable
+from .operators.updatedb import updatedb, updatedb_seen_split
 from .schema import FETCH_RESULTS
 from .store import SnapshotStore
 
@@ -62,10 +63,14 @@ def stream_updatedb(
     `seen_filter` (operators.seen SeenFilter | CuckooSeenFilter) prunes
     each micro-batch's frontier join exactly like the batch crawl loop:
     definitely-new outlink datums take the frontier-free reduce, and
-    the seen table learns the batch's new keys — built from the current
-    frontier on first use, then maintained incrementally per batch
-    (same filter ⊇ frontier invariant, same row-identical result).
+    the seen table learns the batch's new keys — maintained through the
+    same seen.SeenTable as the crawl loop: built from the current
+    frontier on first use or when the stored table's geometry differs
+    from `seen_filter`'s, then added to per batch (same filter ⊇
+    frontier invariant, same row-identical result).
     """
+
+    seen = SeenTable(spark, store, seen_filter)
 
     def _clock(batch_df) -> int:
         if clock is not None:
@@ -94,18 +99,14 @@ def stream_updatedb(
                               schedule=schedule)
             seen_next = None
         else:
-            from .operators.updatedb import updatedb_seen_split
-
-            if not store.exists("seen"):
-                store.write(seen_filter.build(fr), "seen")
             merged, seen_next = updatedb_seen_split(
-                spark, fr, batch_df, cp, now,
-                seen_filter, store.read(spark, "seen"),
+                spark, fr, batch_df, cp, now, seen_filter, seen.read(fr),
                 schedule=schedule,
             )
+        seen.invalidate()
         store.write(merged, "frontier")
         if seen_next is not None:
-            store.write(seen_next, "seen")
+            seen.commit(seen_next)
         store.mark_stage(f"stream{batch_id:08d}", "updatedb", rows=None)
 
     reader = spark.readStream.schema(FETCH_RESULTS)

@@ -394,6 +394,65 @@ def test_seen_filter_split_routes_new_urls(spark, tmp_path):
     assert seen1 == frontier1  # every created URL was add()ed, once
 
 
+def _seen_keys(spark, store):
+    return store.read(spark, "seen").agg(F.sum("n_keys")).collect()[0][0]
+
+
+def _assert_urls_unique(fr):
+    assert fr.count() == fr.select("url").distinct().count()
+
+
+def test_seen_geometry_commit_crash_forces_rebuild(spark, tmp_path,
+                                                   monkeypatch):
+    """A rebuild under geometry G2 killed after its table commit but
+    before its geometry write must not leave the G2 table probed as
+    G1's when the run resumes under G1: the stale geometry is gone
+    before the table commit, so the resumed cycle rebuilds."""
+    from nutch_spark.operators.seen import SeenTable
+
+    web = WebConfig(n_hosts=6, pages_per_host=6, zipf=False,
+                    outlinks_per_page=6)
+    store = SnapshotStore(str(tmp_path / "w"))
+    g1 = dict(n_shards=4, m_indexes=1 << 10)
+    g2 = dict(n_shards=8, m_indexes=1 << 10)
+    base = dict(depth=1, topn=200, seen_filter="cuckoo", start_time_ms=T0)
+    Crawler(spark, store, web, CrawlConfig(seen_params=g1, **base)).inject()
+
+    def killed(self):
+        raise RuntimeError("killed before the geometry write")
+
+    monkeypatch.setattr(SeenTable, "_record_geometry", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        Crawler(spark, store, web,
+                CrawlConfig(seen_params=g2, **base)).cycle(0)
+    monkeypatch.undo()
+
+    Crawler(spark, store, web,
+            CrawlConfig(seen_params=g1, seen_audit=True, **base)).cycle(0)
+    fr = store.read(spark, "frontier")
+    _assert_urls_unique(fr)
+    assert _seen_keys(spark, store) == fr.count()
+
+
+def test_unfiltered_cycle_invalidates_seen_table(spark, tmp_path):
+    """A cycle run without a seen filter adds frontier rows the stored
+    table never learns, so it invalidates the table: a later filtered
+    cycle rebuilds instead of probing the stale one."""
+    web = WebConfig(n_hosts=6, pages_per_host=6, zipf=False,
+                    outlinks_per_page=6)
+    store = SnapshotStore(str(tmp_path / "w"))
+    base = dict(depth=2, topn=200, start_time_ms=T0)
+    cuckoo = dict(seen_filter="cuckoo",
+                  seen_params=dict(n_shards=4, m_indexes=1 << 10))
+    Crawler(spark, store, web, CrawlConfig(**cuckoo, **base)).inject()
+    Crawler(spark, store, web, CrawlConfig(**base)).cycle(0)
+    Crawler(spark, store, web,
+            CrawlConfig(seen_audit=True, **cuckoo, **base)).cycle(1)
+    fr = store.read(spark, "frontier")
+    _assert_urls_unique(fr)
+    assert _seen_keys(spark, store) == fr.count()
+
+
 def test_cuckoo_purge_delete_in_loop(spark, tmp_path):
     """purge_404 + cuckoo: purged URLs leave BOTH the frontier and the
     filter (the delete path blooms can't take), so they are fetchable
@@ -645,3 +704,38 @@ def test_streaming_frontier_ingestion_with_seen_filter(spark, tmp_path):
     # the filter kept pace with the frontier across batches
     n_keys = store.read(spark, "seen").agg(F.sum("n_keys")).collect()[0][0]
     assert n_keys == got.count()
+
+
+def test_streaming_seen_filter_checks_geometry(spark, tmp_path):
+    """The streaming merge rebuilds a seen table committed under another
+    geometry (a 4-shard cuckoo Crawler's) before its 8-shard filter
+    probes it: the frontier equals the unfiltered batch chain, with no
+    URL created twice."""
+    from nutch_spark.operators.seen import CuckooSeenFilter
+    from nutch_spark.streaming import stream_updatedb
+
+    web = WebConfig(n_hosts=4, pages_per_host=5, zipf=False)
+    store = SnapshotStore(str(tmp_path / "w"))
+    Crawler(spark, store, web, CrawlConfig(
+        seen_filter="cuckoo", seen_params=dict(n_shards=4, m_indexes=1 << 10),
+        start_time_ms=T0,
+    )).inject()
+    fr0 = store.read(spark, "frontier").localCheckpoint()
+    robots = {r["host"]: r for r in robots_rows(web)}
+    res = fetch(generate(fr0, T0 + 1, "s1", top_n=100), robots, web,
+                T0 + 1).localCheckpoint()
+    now = res.agg(F.max("fetch_time")).collect()[0][0]
+    expected = updatedb(spark, fr0, res, parse(res)[1].localCheckpoint(),
+                        now).localCheckpoint()
+
+    incoming = str(tmp_path / "incoming")
+    res.coalesce(1).write.mode("append").parquet(incoming)
+    stream_updatedb(
+        spark, store, incoming, str(tmp_path / "ckpt"),
+        seen_filter=CuckooSeenFilter(n_shards=8, m_indexes=1 << 10),
+    ).awaitTermination(120)
+
+    got = store.read(spark, "frontier")
+    _assert_urls_unique(got)
+    assert _full_flat(got).exceptAll(_full_flat(expected)).count() == 0
+    assert _full_flat(expected).exceptAll(_full_flat(got)).count() == 0

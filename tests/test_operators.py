@@ -309,6 +309,38 @@ def test_seen_partitioned_probe_matches_broadcast(spark):
     assert {u for u, s in par.items() if not s} <= exact
 
 
+@pytest.mark.parametrize("mode", ["broadcast", "partitioned"])
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_seen_empty_shards_probe_new(spark, kind, mode):
+    """Both filters share one probe skeleton: a candidate whose shard
+    the build left without a row comes back definitely-new in either
+    probe shape, while every frontier key still comes back
+    maybe_seen."""
+    import numpy as np
+
+    filt = (SeenFilter(n_buckets=8, expected_keys_per_bucket=1000)
+            if kind == "bloom"
+            else CuckooSeenFilter(n_shards=8, m_indexes=256))
+    keys = np.random.default_rng(3).integers(-(2**62), 2**62, 3000)
+    fr_keys = [int(h) for h in keys if h % 8 in (1, 4)]  # ≙ pmod
+    new_keys = [int(h) for h in keys if h % 8 not in (1, 4)]
+
+    def df(ks):
+        return spark.createDataFrame(
+            [(f"u{h}", h) for h in ks], "url string, url_hash long"
+        )
+
+    seen = filt.build(df(fr_keys)).cache()
+    assert sorted(r[0] for r in seen.select(filt._KEY).collect()) == [1, 4]
+    marked = {
+        r.url_hash: r.maybe_seen
+        for r in filt.mark_seen(df(fr_keys + new_keys), seen,
+                                mode=mode).collect()
+    }
+    assert all(marked[h] for h in fr_keys)
+    assert not any(marked[h] for h in new_keys)
+
+
 # ---- URL-seen cuckoo ----
 
 

@@ -128,3 +128,32 @@ def test_job_history_and_config_binding(served):
     assert client.get("/job/5").status_code == 404
     # unknown config on a job → 404
     assert client.post("/job/cycle", json={"config": "nope"}).status_code == 404
+
+
+def test_seed_keeps_seen_table_covering_frontier(spark, tmp_path):
+    """POST /seed with a seen filter bound: /seed invalidates the stored
+    seen table, so every frontier url_hash, seeded ones included, probes
+    maybe_seen against the table the next cycle reads."""
+    pytest.importorskip("flask")
+    from pyspark.sql import functions as F
+
+    from nutch_spark.operators.seen import SeenTable
+    from nutch_spark.server import create_app
+
+    web = WebConfig(n_hosts=3, pages_per_host=4, zipf=False)
+    cfg = CrawlConfig(depth=1, topn=100, start_time_ms=T0,
+                      seen_filter="cuckoo",
+                      seen_params=dict(n_shards=4, m_indexes=1 << 10))
+    store = SnapshotStore(str(tmp_path / "w"))
+    crawler = Crawler(spark, store, web, cfg)
+    crawler.inject()
+    client = create_app(spark, store, web=web, cfg=cfg).test_client()
+    urls = [f"http://seeded{i}.example.com/page{i}" for i in range(50)]
+    assert client.post("/seed", json={"urls": urls}).status_code == 200
+
+    fr = store.read(spark, "frontier")
+    assert fr.filter(F.col("url").startswith("http://seeded")).count() == 50
+    seen = SeenTable(spark, store, crawler._seen).read(fr)
+    marked = crawler._seen.mark_seen(fr.select("url", "url_hash"), seen)
+    assert marked.filter(~F.col("maybe_seen")).count() == 0
+    assert seen.agg(F.sum("n_keys")).collect()[0][0] == fr.count()
