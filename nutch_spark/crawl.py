@@ -1,11 +1,14 @@
 """Crawl driver — the depth-K inject→generate→fetch→parse→updatedb loop.
 
 Reference: src/bin/crawl:168-244 / tools/Benchmark.java:237-271 drive
-the same loop over MR jobs. Here every stage writes a snapshot table
-(store.SnapshotStore ≙ Iceberg commits) and marks a manifest entry, so
-a killed run resumes from the last committed stage (north_rule
+the same loop over MR jobs. Here every stage writes snapshot tables
+(store.SnapshotStore ≙ Iceberg commits) inside one
+`SnapshotStore.run_stage` step, so a killed run resumes (north_rule
 resumability): on restart, completed (segment, stage) pairs are
-skipped and their outputs re-read from the snapshot.
+skipped and their outputs re-read from the snapshot, and the stage
+that was cut is rolled back to the snapshots it started from and
+replayed. A crash between a stage's last commit and its mark therefore
+neither loses the stage nor applies it twice.
 
 The fetch stage is simulated against the deterministic synthetic web
 (synth.py) — same contract as the reference's proxy testbed
@@ -27,21 +30,15 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .constants import Defaults, STATUS_DB_GONE
+from .constants import Defaults
+from .functions.scoring import OPIC
 from .operators.dedup import dedup
 from .operators.fetch import fetch
 from .operators.generate import generate, mark_generated
 from .operators.inject import inject
 from .operators.linkdb import invert_links
 from .operators.parse import crawl_parse_from, extract_pages, finish_pages
-from .operators.seen import CuckooSeenFilter, SeenTable, make_filter
-from .operators.updatedb import updatedb, updatedb_seen_split
-
-
-def _OPIC():
-    from .functions.scoring import OPIC
-
-    return OPIC
+from .operators.seen import SeenTable, make_filter
 from .metrics import partition_counts, status_counters
 from .store import SnapshotStore
 from .synth import WebConfig, robots_rows, seeds_df
@@ -95,7 +92,7 @@ class CrawlConfig:
     # shuffle this prunes; false positives merely route a new URL
     # through the big join, where the lone-link branch creates it
     # identically (row-identical output either way — see
-    # tests/test_crawl.py seen-parity cases).
+    # tests/test_cycle.py seen-parity cases).
     seen_filter: str | None = None  # None | "bloom" | "cuckoo"
     seen_params: dict | None = None  # filter ctor kwargs
     # exact anti-join audit of the split (test mode): every
@@ -167,15 +164,15 @@ class Crawler:
 
     # -- stages --
     def inject(self, seeds: DataFrame | None = None) -> None:
-        if self.store.stage_done("inject", "inject"):
-            return
+        self.store.run_stage("inject", "inject", lambda: self._inject(seeds))
+
+    def _inject(self, seeds: DataFrame | None) -> None:
         seeds = seeds if seeds is not None else seeds_df(self.spark, self.web)
         fr = inject(
             self.spark, self._frontier(), seeds, self.cfg.start_time_ms,
             **self._plugin_kwargs("inject"),
         )
-        self._seen_table.invalidate()
-        self._write_frontier(fr)
+        self._seen_table.commit_frontier(fr, write=self._write_frontier)
         if self._seen is not None:
             # build the URL-seen structure over the injected frontier —
             # one shuffle on bucket/shard, each partition builds its
@@ -183,154 +180,109 @@ class Crawler:
             # SeenTable.read would build it too; building here keeps the
             # stored table covering the frontier for a direct store read
             # of `seen` before then (its n_keys right after inject)
-            self._seen_table.commit(
-                self._seen.build(self.store.read(self.spark, "frontier"))
-            )
-        self._write_metrics(self.store.read(self.spark, "frontier"), "inject", "inject")
-        self.store.mark_stage("inject", "inject")
+            self._seen_table.read(self._frontier())
+        self._write_metrics(self._frontier(), "inject", "inject")
 
     def cycle(self, depth: int) -> dict:
-        """One generate→fetch→parse→updatedb(→dedup) round; resumable
-        per stage. Returns counters for the round."""
+        """One generate→fetch→parse→updatedb(→dedup) round; each stage
+        runs through SnapshotStore.run_stage, so a resumed round skips
+        the stages marked done and rolls back and replays the one that
+        was cut. Returns counters for the round."""
         seg = f"seg{depth:04d}"
         now = self.cfg.start_time_ms + (depth + 1) * self.cfg.cycle_ms
         stats: dict = {"segment": seg}
+        run = self.store.run_stage
 
-        if not self.store.stage_done(seg, "generate"):
-            fr = self._frontier()
-            fl = generate(
-                fr, now, seg, top_n=self.cfg.topn,
-                max_count=self.cfg.max_count,
-                **self._plugin_kwargs("generate"),
-            )
-            self.store.write(fl, "fetchlist")
-            if self.cfg.mark_generate:
-                fl_r = self.store.read(self.spark, "fetchlist")
-                self._write_frontier(mark_generated(fr, fl_r, now))
-            self.store.mark_stage(seg, "generate")
+        run(seg, "generate", lambda: self._generate(seg, now))
         fl = self.store.read(self.spark, "fetchlist")
-        if self.cfg.collect_stats:
-            stats["generated"] = fl.count()
-        else:
-            stats["generated"] = fl.limit(1).count()  # emptiness only
+        # without collect_stats, emptiness only
+        stats["generated"] = (fl if self.cfg.collect_stats else fl.limit(1)).count()
         if stats["generated"] == 0:
-            self.store.mark_stage(seg, "fetch")
-            self.store.mark_stage(seg, "parse")
-            self.store.mark_stage(seg, "updatedb")
+            for stage in ("fetch", "parse", "updatedb"):
+                self.store.mark_stage(seg, stage)
             return stats
 
-        if not self.store.stage_done(seg, "fetch"):
-            res = fetch(
-                fl, self.robots, self.web, now,
-                queue_mode=self.cfg.queue_mode,
-                resolver=self.cfg.resolver,
-            )
-            self.store.write(res, "fetch_results")
-            self._write_metrics(
-                self.store.read(self.spark, "fetch_results"), seg, "fetch"
-            )
-            self.store.mark_stage(seg, "fetch")
+        run(seg, "fetch", lambda: self._fetch(seg, now, fl))
         res = self.store.read(self.spark, "fetch_results")
         if self.cfg.collect_stats:
             stats["fetched"] = res.count()
 
-        if not self.store.stage_done(seg, "parse"):
-            # three materializations ≙ the reference segment's
-            # parse_text / parse_data / crawl_parse dirs; each expensive
-            # expression chain runs exactly once per page (see parse.py)
-            pk = self._plugin_kwargs("parse")
-            self.store.write(extract_pages(res), "parse_text")
-            base = self.store.read(self.spark, "parse_text")
-            self.store.write(
-                finish_pages(
-                    base,
-                    ignore_external=self.cfg.ignore_external,
-                    external_mode=self.cfg.external_mode,
-                    exemptions=pk.get("exemptions"),
-                    normalizers=pk.get("normalizers"),
-                    url_filters=pk.get("url_filters"),
-                    parse_filters=pk.get("parse_filters"),
-                ),
-                "parse_data",
-            )
-            pd_r = self.store.read(self.spark, "parse_data")
-            self.store.write(
-                crawl_parse_from(
-                    pd_r, res,
-                    hooks=pk.get("hooks") or _OPIC(),
-                    normalizers=pk.get("normalizers"),
-                ),
-                "crawl_parse",
-            )
-            self.store.mark_stage(seg, "parse")
-        parse_data = self.store.read(self.spark, "parse_data")
-        crawl_parse = self.store.read(self.spark, "crawl_parse")
+        run(seg, "parse", lambda: self._parse(res))
         if self.cfg.collect_stats:
-            stats["parsed"] = parse_data.count()
+            stats["parsed"] = self.store.read(self.spark, "parse_data").count()
 
-        if not self.store.stage_done(seg, "updatedb"):
-            fr = self._frontier()
-            upd_kw = dict(
-                schedule=self.cfg.schedule,
-                purge_404=self.cfg.purge_404,
-                **self._plugin_kwargs("updatedb"),
-            )
-            if self._seen is None:
-                fr2 = updatedb(self.spark, fr, res, crawl_parse, now,
-                               **upd_kw)
-                seen_next = None
-            else:
-                fr2, seen_next = self._updatedb_with_seen(
-                    fr, res, crawl_parse, now, upd_kw
-                )
-            if self.cfg.dedup_each_cycle:
-                fr2 = dedup(fr2)
-            self._seen_table.invalidate()
-            self._write_frontier(fr2)
-            if seen_next is not None:
-                self._seen_table.commit(seen_next)
-            self._write_metrics(
-                self.store.read(self.spark, "frontier"), seg, "updatedb"
-            )
-            self.store.mark_stage(seg, "updatedb")
+        crawl_parse = self.store.read(self.spark, "crawl_parse")
+        run(seg, "updatedb", lambda: self._updatedb(seg, now, res, crawl_parse))
         if self.cfg.collect_stats:
-            stats["frontier"] = self.store.read(self.spark, "frontier").count()
+            stats["frontier"] = self._frontier().count()
         return stats
 
-    def _updatedb_with_seen(self, fr, res, crawl_parse, now: int,
-                            upd_kw: dict):
-        """UpdateDb with the URL-seen filter pruning the frontier join
-        (the shared split core lives in updatedb_seen_split — routing
-        semantics, narrow probe, and the filter ⊇ frontier invariant
-        are documented there; seen.SeenTable maintains the invariant).
-        Additionally, with cuckoo + purge_404, purged-and-not-recreated
-        keys are delete()d so they can be re-discovered later."""
-        seen_tbl = self._seen_table.read(fr)
-        # the delete path is only membership-safe if every created row
-        # owns an inserted fingerprint copy — including false-positive
-        # creations (see updatedb_seen_split's insert_created contract)
-        deletes_on = self.cfg.purge_404 and isinstance(
-            self._seen, CuckooSeenFilter
+    def _generate(self, seg: str, now: int) -> None:
+        fr = self._frontier()
+        fl = generate(
+            fr, now, seg, top_n=self.cfg.topn,
+            max_count=self.cfg.max_count,
+            **self._plugin_kwargs("generate"),
         )
-        fr2, seen_next = updatedb_seen_split(
-            self.spark, fr, res, crawl_parse, now,
-            self._seen, seen_tbl, audit=self.cfg.seen_audit,
-            insert_created=deletes_on, **upd_kw,
+        self.store.write(fl, "fetchlist")
+        if self.cfg.mark_generate:
+            self._write_frontier(mark_generated(
+                fr, self.store.read(self.spark, "fetchlist"), now))
+
+    def _fetch(self, seg: str, now: int, fl: DataFrame) -> None:
+        res = fetch(
+            fl, self.robots, self.web, now,
+            queue_mode=self.cfg.queue_mode,
+            resolver=self.cfg.resolver,
         )
-        if deletes_on:
-            # purged keys leave the filter UNLESS this cycle's parse
-            # stream recreates them (updatedb filters the old row out
-            # before the join, so a purged URL with an inbound link
-            # re-enters as db_unfetched and must stay "seen"). The
-            # recreated check is small×small: purge set ⋈ cp URLs.
-            purged = fr.filter(
-                F.col("status") == STATUS_DB_GONE
-            ).select("url", "url_hash")
-            gone = purged.join(
-                crawl_parse.select("url").distinct(), "url", "left_anti"
-            ).select("url_hash")
-            seen_next = self._seen.delete(seen_next, gone)
-        return fr2, seen_next
+        self.store.write(res, "fetch_results")
+        self._write_metrics(
+            self.store.read(self.spark, "fetch_results"), seg, "fetch"
+        )
+
+    def _parse(self, res: DataFrame) -> None:
+        # three materializations ≙ the reference segment's parse_text /
+        # parse_data / crawl_parse dirs; each expensive expression chain
+        # runs exactly once per page (see parse.py)
+        pk = self._plugin_kwargs("parse")
+        self.store.write(extract_pages(res), "parse_text")
+        base = self.store.read(self.spark, "parse_text")
+        self.store.write(
+            finish_pages(
+                base,
+                ignore_external=self.cfg.ignore_external,
+                external_mode=self.cfg.external_mode,
+                exemptions=pk.get("exemptions"),
+                normalizers=pk.get("normalizers"),
+                url_filters=pk.get("url_filters"),
+                parse_filters=pk.get("parse_filters"),
+            ),
+            "parse_data",
+        )
+        pd_r = self.store.read(self.spark, "parse_data")
+        self.store.write(
+            crawl_parse_from(
+                pd_r, res,
+                hooks=pk.get("hooks") or OPIC,
+                normalizers=pk.get("normalizers"),
+            ),
+            "crawl_parse",
+        )
+
+    def _updatedb(self, seg: str, now: int, res: DataFrame,
+                  crawl_parse: DataFrame) -> None:
+        def write(fr: DataFrame) -> None:
+            self._write_frontier(dedup(fr) if self.cfg.dedup_each_cycle else fr)
+
+        self._seen_table.merge(
+            res, crawl_parse, now,
+            audit=self.cfg.seen_audit,
+            write=write,
+            schedule=self.cfg.schedule,
+            purge_404=self.cfg.purge_404,
+            **self._plugin_kwargs("updatedb"),
+        )
+        self._write_metrics(self._frontier(), seg, "updatedb")
 
     def fetched_total(self) -> int:
         """Total fetched URLs from the lineage metrics (throughput

@@ -143,32 +143,6 @@ def generate(
     )
 
 
-def generate_threshold(
-    frontier: DataFrame,
-    cur_time_ms: int,
-    segment: str,
-    top_n: int,
-    **kwargs,
-) -> DataFrame:
-    """Scale path for very large topN: pick a score threshold with
-    approxQuantile, then a plain filter — avoids any global ordering."""
-    due = frontier.filter(
-        should_fetch(F.col("fetch_time"), F.col("fetch_interval"), cur_time_ms)
-    )
-    total = due.count()
-    if total <= top_n:
-        return generate(frontier, cur_time_ms, segment, top_n=-1, **kwargs)
-    q = max(0.0, 1.0 - top_n / total)
-    thr = due.approxQuantile("score", [q], 0.01)[0]
-    return generate(
-        frontier.filter(F.col("score") >= thr),
-        cur_time_ms,
-        segment,
-        top_n=top_n,
-        **kwargs,
-    )
-
-
 def free_generate(
     urls: DataFrame,
     segment: str,

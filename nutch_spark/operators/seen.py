@@ -27,8 +27,10 @@ the explicit bloom/cuckoo structure the north rule calls for:
     and as the exact fallback;
   * `SeenTable` owns the stored table for every writer of the frontier
     (the crawl loop, the streaming merge, the server's /seed): the
-    geometry check with rebuild and the commit of table plus geometry,
-    which together keep the filter ⊇ frontier invariant.
+    geometry check with rebuild, the commit of table plus geometry, and
+    the one updatedb-and-commit path of the frontier (`merge`,
+    `commit_frontier`), which together keep the filter ⊇ frontier
+    invariant.
 
 Bloom math: k = round(bits_per_key·ln2) hash functions via double
 hashing h_i = h1 + i·h2 (Kirsch–Mitzenmacher), h1/h2 drawn from the
@@ -47,6 +49,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..constants import STATUS_DB_GONE
+from .updatedb import updatedb, updatedb_seen_split
 
 SEEN_SCHEMA = T.StructType(
     [
@@ -598,22 +603,23 @@ class SeenTable:
     plain merge only while the filter answers maybe_seen for EVERY
     frontier URL: a false positive merely takes the big join's
     lone-link branch, a false negative double-creates a row. So every
-    writer of the frontier goes through here:
+    frontier write that can add keys goes through `commit_frontier`:
+    it invalidates the table, writes the frontier, then commits the
+    maintained table, so a crash in between leaves the table invalid
+    and the next `read` rebuilds it. `merge` is the one updatedb in
+    front of it for the crawl loop and the streaming merge; the
+    server's /seed and Crawler.inject commit an inject.
 
-      * `read` is the table to probe, (re)built over the frontier first
-        if it is absent — resume from a pre-filter warehouse — or was
-        committed under another geometry (resume with changed
-        seen_filter/seen_params), whose bucket ids / bit positions the
-        filter would misread as unseen;
-      * `invalidate` before a frontier write that can add keys, and
-        `commit` the maintained table after it: a crash in between
-        leaves no geometry, so the next `read` rebuilds. A writer with
-        no maintained table (the server's /seed) only invalidates.
-
-    The geometry file (seen/GEOMETRY.json) is removed before every
-    table commit and written after it, so a table is never probed under
-    a geometry it was not committed with. With no filter bound
-    (`filt=None`) a writer can only invalidate."""
+    `read` is the table to probe, (re)built over the frontier first if
+    it is not current: absent (resume from a pre-filter warehouse),
+    committed under another geometry (resume with changed
+    seen_filter/seen_params, whose bucket ids / bit positions the filter
+    would misread as unseen), or rolled back by a stage replay
+    (SnapshotStore.run_stage). The geometry record (seen/GEOMETRY.json)
+    names the geometry and the snapshot it was committed with; it is
+    removed before every table commit and written after it, so a table
+    is never probed under a record it was not committed with. With no
+    filter bound (`filt=None`) a writer can only invalidate."""
 
     def __init__(self, spark, store, filt):
         self.spark = spark
@@ -621,14 +627,19 @@ class SeenTable:
         self.filt = filt
         self._geometry_path = os.path.join(store.root, "seen", "GEOMETRY.json")
 
+    def _record(self) -> dict:
+        return {"geometry": self.filt.geometry(),
+                "snapshot": self.store.current_snapshot("seen")}
+
     def _current(self) -> bool:
-        """Whether the stored table was committed under `filt`'s geometry."""
+        """Whether the stored table is the one last committed under
+        `filt`'s geometry."""
         try:
             with open(self._geometry_path) as f:
                 stored = json.load(f)
         except (FileNotFoundError, json.JSONDecodeError):
             return False
-        return self.store.exists("seen") and stored == self.filt.geometry()
+        return self.store.exists("seen") and stored == self._record()
 
     def read(self, frontier: DataFrame) -> DataFrame:
         if not self._current():
@@ -651,4 +662,50 @@ class SeenTable:
     def _record_geometry(self) -> None:
         os.makedirs(os.path.dirname(self._geometry_path), exist_ok=True)
         with open(self._geometry_path, "w") as f:
-            json.dump(self.filt.geometry(), f)
+            json.dump(self._record(), f)
+
+    def commit_frontier(self, merged: DataFrame, seen_next: DataFrame | None = None,
+                        write=None) -> None:
+        """Write `merged` as the frontier (through `write(df)` when
+        given, e.g. the crawl loop's host-bucketed layout), then commit
+        `seen_next`, the table that covers it, if there is one."""
+        self.invalidate()
+        (write or (lambda df: self.store.write(df, "frontier")))(merged)
+        if seen_next is not None:
+            self.commit(seen_next)
+
+    def merge(self, fetch_results, crawl_parse, now: int, *, audit=False,
+              write=None, **upd_kw) -> None:
+        """updatedb of the current frontier with a cycle's or a stream
+        batch's results, committed through `commit_frontier`.
+
+        With a filter bound, the merge is updatedb_seen_split against
+        `read`'s table (routing, narrow probe and invariant are
+        documented there); `audit` checks every definitely-new datum
+        against the frontier. With the cuckoo and purge_404, purged keys
+        are delete()d, so they can be discovered again; that is only
+        membership-safe if every created row owns an inserted copy, so
+        the split inserts its false-positive creations too."""
+        fr = (self.store.read(self.spark, "frontier")
+              if self.store.exists("frontier") else None)
+        seen_next = None
+        if self.filt is None or fr is None:
+            merged = updatedb(self.spark, fr, fetch_results, crawl_parse, now,
+                              **upd_kw)
+        else:
+            deletes_on = upd_kw.get("purge_404", False) and isinstance(
+                self.filt, CuckooSeenFilter)
+            merged, seen_next = updatedb_seen_split(
+                self.spark, fr, fetch_results, crawl_parse, now, self.filt,
+                self.read(fr), audit=audit, insert_created=deletes_on,
+                **upd_kw,
+            )
+            if deletes_on:
+                # purged keys leave the filter UNLESS this merge's parse
+                # stream recreates them (updatedb filters the old row
+                # out before the join, so a purged URL with an inbound
+                # link re-enters as db_unfetched and must stay "seen")
+                gone = fr.filter(F.col("status") == STATUS_DB_GONE).join(
+                    crawl_parse.select("url").distinct(), "url", "left_anti")
+                seen_next = self.filt.delete(seen_next, gone.select("url_hash"))
+        self.commit_frontier(merged, seen_next, write)

@@ -34,9 +34,7 @@ Exact semantics carried over:
 
 Scale: the three small sides aggregate BEFORE the join (map-side partial
 aggs), the big frontier side joins once on url. AQE skew-join splits hot
-URL-hash partitions; `repartition_on` lets the caller pre-shuffle on a
-salted host-hash to co-locate with the frontier table's bucketing
-(north_rule explicit skew handling).
+URL-hash partitions.
 """
 
 from __future__ import annotations
@@ -85,7 +83,6 @@ def updatedb(
     max_inlinks: int = Defaults.MAX_INLINKS,
     additions_allowed: bool = True,
     purge_404: bool = False,
-    repartition_on: int | None = None,
     hooks: ScoringHooks = OPIC,
 ) -> DataFrame:
     if frontier is None:
@@ -280,8 +277,6 @@ def updatedb(
         j = j.withColumn(
             "link_meta_first", F.lit(None).cast("map<string,string>")
         )
-    if repartition_on:
-        j = j.repartition(repartition_on, "url")
 
     old_set = F.col("o").isNotNull()
     fetch_set = F.col("f").isNotNull()

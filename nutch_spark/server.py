@@ -153,15 +153,12 @@ def create_app(spark, store, web=None, cfg=None):
         seeds = spark.createDataFrame(
             [(u, None) for u in urls], "url string, metadata map<string,string>"
         )
-        fr = None
-        if store.exists("frontier"):
-            fr = store.read(spark, "frontier")
+        fr = store.read(spark, "frontier") if store.exists("frontier") else None
         now = int(body.get("now", time.time() * 1000))
-        merged = inject(spark, fr, seeds, now)
-        # the injected keys are not in the stored seen table: invalidate
-        # it, so the next filtered cycle rebuilds it over the frontier
-        SeenTable(spark, store, None).invalidate()
-        store.write(merged, "frontier")
+        # the injected keys are not in the stored seen table: the commit
+        # invalidates it, so the next filtered cycle rebuilds it
+        SeenTable(spark, store, None).commit_frontier(
+            inject(spark, fr, seeds, now))
         return jsonify({"frontier": store.read(spark, "frontier").count()})
 
     # --- ConfigResource: named in-memory property maps ---

@@ -14,9 +14,12 @@ three properties the engine relies on, on plain parquet:
   2. **Time travel / rollback** — old snapshot dirs are retained;
      `read(table, snapshot=k)` reads any retained snapshot (the
      reference keeps one generation in ``old/``).
-  3. **Checkpoint manifest** — `commit_manifest` records per-cycle stage
-     completion for crash-resume (north_rule resumability), like Iceberg
-     snapshot metadata.
+  3. **Checkpoint manifest** — `run_stage` is the one resume step of
+     every warehouse writer (north_rule resumability): it records every
+     table's pointer before a stage and marks the stage done after, like
+     Iceberg snapshot metadata. A stage started but never marked is
+     rolled back to its recorded pointers and replayed, so a crash
+     between a sink commit and the mark never applies a stage twice.
   4. **Schema in the commit** — each snapshot's ``_TBLMETA.json``
      sidecar carries the written frame's schema and is in place before
      the pointer swap, so it commits atomically with the data. `read`
@@ -35,7 +38,7 @@ import json
 import os
 import shutil
 import tempfile
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql.types import StructType
@@ -267,7 +270,35 @@ class SnapshotStore:
         m = self.read_manifest()
         cyc = m["cycles"].setdefault(segment, {})
         cyc[stage] = {"done": True, **extra}
+        m.get("started", {}).pop(f"{segment}/{stage}", None)
         self.commit_manifest(m)
 
     def stage_done(self, segment: str, stage: str) -> bool:
         return bool(self.read_manifest()["cycles"].get(segment, {}).get(stage, {}).get("done"))
+
+    def run_stage(self, segment: str, stage: str, body: Callable[[], Any]) -> None:
+        """Run `body` as (segment, stage) of the checkpoint manifest,
+        exactly once in effect.
+
+        A stage marked done is skipped. Before a first attempt the
+        manifest records every table's pointer under ``started``; a
+        replay (started but never marked) first restores those pointers
+        and drops tables the stage created, so it reads what the first
+        attempt read and appends to `metrics` once. The record is kept
+        out of ``cycles``, which holds only completed stages."""
+        if self.stage_done(segment, stage):
+            return
+        m = self.read_manifest()
+        tables = [t for t in os.listdir(self.root) if os.path.exists(self._pointer(t))]
+        before = m.setdefault("started", {}).get(f"{segment}/{stage}")
+        if before is None:
+            m["started"][f"{segment}/{stage}"] = {t: self._pointer_state(t) for t in tables}
+            self.commit_manifest(m)
+        else:  # a replay: restore the pointers the first attempt read
+            for t in tables:
+                if t in before:
+                    self._advance(t, *before[t])
+                else:
+                    os.remove(self._pointer(t))
+        body()
+        self.mark_stage(segment, stage)

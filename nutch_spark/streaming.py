@@ -7,11 +7,16 @@ CONTINUOUSLY: fetch/parse results land as parquet files in an incoming
 directory (e.g. written by a separate fetch fleet, a Kafka sink, or
 another cluster), and a Structured Streaming query folds every
 micro-batch into the frontier through the exact same updatedb state
-machine, committing each merge as an atomic snapshot. Checkpointing
-makes the ingestion exactly-once across restarts: a replayed batch
-re-runs the same deterministic merge against the same parent snapshot
-lineage (the store keeps per-batch snapshots, so recovery is rollback +
-replay, mirroring the batch driver's stage manifest).
+machine, committing each merge as an atomic snapshot. Each batch
+runs as one `SnapshotStore.run_stage` step keyed by the checkpoint dir
+and the batch id, so the ingestion is exactly-once across restarts: a
+batch the manifest marks done is skipped when Spark replays it (its
+commit log lost the batch, say, after the frontier commit), and a batch
+cut before its mark is rolled back to the snapshots it started from
+and merged again, the same deterministic merge over the same parent
+snapshot. Batch ids restart with every new checkpoint, so each
+checkpoint keeps its own marks: a query over a fresh checkpoint merges
+its batch 0 even where an earlier query marked one.
 
 At 10^10-URL scale the shape is identical — `availableNow` drains a
 backlog with bounded batches; a continuous trigger keeps the frontier
@@ -20,13 +25,13 @@ within one micro-batch of the fetch fleet.
 
 from __future__ import annotations
 
+import os
 from typing import Callable
 
 from pyspark.sql import functions as F
 
 from .operators.parse import crawl_parse_from, parse_pages
 from .operators.seen import SeenTable
-from .operators.updatedb import updatedb, updatedb_seen_split
 from .schema import FETCH_RESULTS
 from .store import SnapshotStore
 
@@ -71,6 +76,9 @@ def stream_updatedb(
     """
 
     seen = SeenTable(spark, store, seen_filter)
+    # batch ids restart with every checkpoint, so the marks are per
+    # checkpoint
+    segment = f"stream:{os.path.abspath(checkpoint_dir)}"
 
     def _clock(batch_df) -> int:
         if clock is not None:
@@ -78,9 +86,7 @@ def stream_updatedb(
         row = batch_df.agg(F.max("fetch_time").alias("m")).collect()[0]
         return int(row.m or 0)
 
-    def _merge(batch_df, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def _merge(batch_df) -> None:
         now = _clock(batch_df)
         # cut lineage: the batch is consumed by parse + updatedb twice
         batch_df = batch_df.localCheckpoint()
@@ -89,32 +95,19 @@ def stream_updatedb(
         else:
             pd_ = parse_pages(batch_df).localCheckpoint()
             cp = crawl_parse_from(pd_, batch_df)
-        fr = (
-            store.read(spark, "frontier")
-            if store.exists("frontier")
-            else None
-        )
-        if seen_filter is None or fr is None:
-            merged = updatedb(spark, fr, batch_df, cp, now,
-                              schedule=schedule)
-            seen_next = None
-        else:
-            merged, seen_next = updatedb_seen_split(
-                spark, fr, batch_df, cp, now, seen_filter, seen.read(fr),
-                schedule=schedule,
-            )
-        seen.invalidate()
-        store.write(merged, "frontier")
-        if seen_next is not None:
-            seen.commit(seen_next)
-        store.mark_stage(f"stream{batch_id:08d}", "updatedb", rows=None)
+        seen.merge(batch_df, cp, now, schedule=schedule)
+
+    def _batch(batch_df, batch_id: int) -> None:
+        if batch_df.take(1):
+            store.run_stage(segment, f"batch{batch_id:08d}",
+                            lambda: _merge(batch_df))
 
     reader = spark.readStream.schema(FETCH_RESULTS)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(incoming_dir)
     writer = (
-        stream.writeStream.foreachBatch(_merge)
+        stream.writeStream.foreachBatch(_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
     )

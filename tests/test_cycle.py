@@ -739,3 +739,113 @@ def test_streaming_seen_filter_checks_geometry(spark, tmp_path):
     _assert_urls_unique(got)
     assert _full_flat(got).exceptAll(_full_flat(expected)).count() == 0
     assert _full_flat(expected).exceptAll(_full_flat(got)).count() == 0
+
+
+# ---------------------------------------------------------------------
+# Crash matrix: a run killed after a stage's last commit but before its
+# manifest mark resumes, in a fresh Crawler, to the uninterrupted run's
+# frontier and fetch count: the cut stage is rolled back to the
+# snapshots it started from and replayed once (SnapshotStore.run_stage).
+# ---------------------------------------------------------------------
+
+_CRASH_WEB = WebConfig(n_hosts=4, pages_per_host=6, zipf=False)
+_CRASH_CFG = dict(depth=1, topn=50, dedup_each_cycle=False,
+                  collect_stats=False, start_time_ms=T0)
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, tmp_path_factory):
+    store = SnapshotStore(str(tmp_path_factory.mktemp("uninterrupted")))
+    crawler = Crawler(spark, store, _CRASH_WEB, CrawlConfig(**_CRASH_CFG))
+    crawler.crawl()
+    return store.read(spark, "frontier"), crawler.fetched_total()
+
+
+@pytest.mark.parametrize(
+    "stage,seen",
+    [
+        ("inject", {}),
+        ("generate", {}),
+        ("fetch", {}),
+        ("parse", {}),
+        ("updatedb", {}),
+        ("updatedb", dict(seen_filter="cuckoo", seen_audit=True,
+                          seen_params=dict(n_shards=4, m_indexes=1 << 10))),
+    ],
+    ids=["inject", "generate", "fetch", "parse", "updatedb",
+         "updatedb-cuckoo"],
+)
+def test_crash_before_mark_resumes(spark, tmp_path, monkeypatch,
+                                   uninterrupted, stage, seen):
+    segment = "inject" if stage == "inject" else "seg0000"
+    mark = SnapshotStore.mark_stage
+
+    def crash_once(self, seg, st, **extra):
+        if (seg, st) == (segment, stage):
+            monkeypatch.undo()
+            raise RuntimeError("killed before the mark")
+        mark(self, seg, st, **extra)
+
+    monkeypatch.setattr(SnapshotStore, "mark_stage", crash_once)
+    cfg = CrawlConfig(**_CRASH_CFG, **seen)
+    root = str(tmp_path / "w")
+    with pytest.raises(RuntimeError, match="killed"):
+        Crawler(spark, SnapshotStore(root), _CRASH_WEB, cfg).crawl()
+    store = SnapshotStore(root)
+    resumed = Crawler(spark, store, _CRASH_WEB, cfg)
+    resumed.crawl()
+
+    ref, ref_fetched = uninterrupted
+    got = store.read(spark, "frontier")
+    assert _full_flat(got).exceptAll(_full_flat(ref)).count() == 0
+    assert _full_flat(ref).exceptAll(_full_flat(got)).count() == 0
+    assert resumed.fetched_total() == ref_fetched
+    if seen:
+        assert _seen_keys(spark, store) == got.count()
+
+
+def test_streaming_batch_replay(spark, tmp_path):
+    """A batch whose frontier commit landed but whose entry in Spark's
+    commit log did not is run again when the query restarts; its
+    manifest mark skips it, so the frontier is unchanged. A query over
+    a fresh checkpoint still merges its own batch 0."""
+    import os
+
+    from nutch_spark.streaming import stream_updatedb
+
+    web = WebConfig(n_hosts=3, pages_per_host=4, zipf=False, gone_frac=0,
+                    redir_frac=0)
+    robots = {r["host"]: r for r in robots_rows(web)}
+    fr0 = inject(spark, None, seeds_df(spark, web), T0).localCheckpoint()
+    res1 = fetch(generate(fr0, T0 + 1, "s1", top_n=100), robots, web,
+                 T0 + 1).localCheckpoint()
+    now1 = res1.agg(F.max("fetch_time")).collect()[0][0]
+    fr1 = updatedb(spark, fr0, res1, parse(res1)[1].localCheckpoint(),
+                   now1).localCheckpoint()
+    res2 = fetch(generate(fr1, T0 + 2, "s2", top_n=100), robots, web,
+                 T0 + 2).localCheckpoint()
+    now2 = res2.agg(F.max("fetch_time")).collect()[0][0]
+    fr2 = updatedb(spark, fr1, res2, parse(res2)[1].localCheckpoint(),
+                   now2).localCheckpoint()
+
+    store = SnapshotStore(str(tmp_path / "w"))
+    store.write(fr0, "frontier")
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain(res, incoming, checkpoint):
+        res.coalesce(1).write.mode("append").parquet(str(tmp_path / incoming))
+        stream_updatedb(spark, store, str(tmp_path / incoming),
+                        checkpoint).awaitTermination(120)
+        return _full_flat(store.read(spark, "frontier"))
+
+    def same(a, b):
+        return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+    assert same(drain(res1, "in1", ckpt), _full_flat(fr1))
+    os.remove(os.path.join(ckpt, "commits", "0"))
+    os.remove(os.path.join(ckpt, "commits", ".0.crc"))
+    stream_updatedb(spark, store, str(tmp_path / "in1"),
+                    ckpt).awaitTermination(120)
+    assert os.path.exists(os.path.join(ckpt, "commits", "0"))
+    assert same(_full_flat(store.read(spark, "frontier")), _full_flat(fr1))
+    assert same(drain(res2, "in2", str(tmp_path / "ckpt2")), _full_flat(fr2))
